@@ -9,9 +9,9 @@ behind the paper's recon heatmap (cells 33-34). Cells 39-40 publish the
 training NB-classification accuracy (1.0 for every model on the shown
 dataset; the cell-43 heatmap renders the full all-1.0 grid).
 
-Engine side: QUALITY_r8_*.log qsweep rows (graft.QualitySweep `ref` mode:
-search -> retrain -> per-subject train recon (A10) -> embedding NB CV (M1),
-nTrials=3, epochScale=0.02, seeded).
+Engine side: QUALITY_r8_*.log qsweep rows (from the since-removed
+QualitySweep `ref` mode: search -> retrain -> per-subject train recon
+(A10) -> embedding NB CV (M1), nTrials=3, epochScale=0.02, seeded).
 
 Checks (per family):
   B1 nb-acc:    engine mean NB accuracy == 1.000 on all 20 datasets,

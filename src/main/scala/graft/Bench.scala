@@ -43,13 +43,19 @@ object Bench {
   private def f(v: Double, d: Int): String =
     s"%.${d}f".formatLocal(java.util.Locale.ROOT, v)
 
-  /** JSON string escape for query names — names are code-controlled
-   * today, but a stray quote/backslash/control char must corrupt a name,
-   * never the line the driver and BenchLineSpec parse. */
+  /** JSON string escape: quote, backslash, and ALL control chars
+   * (<0x20). Shared by the bench line (query names) and Verify's
+   * oracle_sql.json: both are code-controlled, but a stray quote or a
+   * tab/CR in oracle SQL must never break the JSON their readers parse —
+   * a failed json.load of oracle_sql.json would silently zero the
+   * correctness check. */
   private[graft] def jstr(s: String): String =
     "\"" + s.flatMap {
       case '"'  => "\\\""
       case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""

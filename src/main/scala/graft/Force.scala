@@ -10,8 +10,7 @@ import org.apache.spark.sql.DataFrame
   * entire right subtree once its columns are pruned, so a benchmark
   * "forcing" x17_contamination with count() times the distinct-doc_id
   * aggregation and never runs the contamination join at all (found by
-  * DecontamScaleProof's checksum cross-check: 2.2 s hollow vs 31.5 s
-  * real at ×1000).
+  * a checksum cross-check: 2.2 s hollow vs 31.5 s real at ×1000).
   *
   * `queryExecution.toRdd.count()` executes the DataFrame's OWN physical
   * plan — every operator, every column — and only counts the resulting

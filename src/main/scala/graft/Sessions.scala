@@ -18,8 +18,8 @@ import org.apache.spark.sql.SparkSession
   *    a bare `java -cp` main are NOT on their classpath (nothing submits
   *    a jar). The driver's own `java.class.path` is forwarded through
   *    `spark.executor.extraClassPath`, which is correct when the main is
-  *    launched via `java -cp <full classpath>` (the qsweep_worker.sh
-  *    pattern) and NOT through sbt's in-process classloader.
+  *    launched via `java -cp <full classpath>` and NOT through sbt's
+  *    in-process classloader.
   *  - executor memory comes from the third bracket field (MiB).
   */
 object Sessions {

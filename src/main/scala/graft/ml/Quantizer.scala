@@ -12,7 +12,7 @@ import scala.collection.concurrent.TrieMap
   * on the FULL corpus at k ≈ n/256, which caps at k = 4096 because both
   * the fit (O(iter·n·k·d)) and the flat argmin assignment (k·d per
   * vector) grow super-linearly past it — and past the cap, cells regrow
-  * and SemDeDup's banded fallback has MEASURED recall loss (SemDedupProbe
+  * and SemDeDup's banded fallback has MEASURED recall loss (BENCH_SCALES
   * r12: 793/2000 duplicate groups kept ≥2 members at √n-sized cells).
   * This fit removes the ceiling with the standard hierarchical envelope:
   *

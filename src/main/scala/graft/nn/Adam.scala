@@ -1,24 +1,5 @@
 package graft.nn
 
-object Adam {
-  /** Torch-exact floating-point EVALUATION ORDER for the update
-    * (QUALITY_r12 floor probe, VERDICT r11 ask #1a). The engine's
-    * default update and torch's `_single_tensor_adam` are the same
-    * formula — decay added to the gradient before the moments
-    * (classic Adam-L2, `optim.Adam(..., weight_decay=λ)`,
-    * ref: Simulation_Models/CNC_AE_model_selection.py:366), ε OUTSIDE
-    * the sqrt — and differ only in rounding association:
-    *
-    *   engine default: p −= lr · (m/bc1) / (√(v/bc2) + ε)
-    *   torch order:    p −= (lr/bc1) · m / (√v/√bc2 + ε)
-    *
-    * `-Dgraft.adam.torchOrder=true` switches to torch's exact
-    * association (step size lr/bc1 and √bc2 hoisted per step, like
-    * torch). JVM-wide probe flag, same pattern as [[Kernel.F32]];
-    * library default stays the engine order. */
-  val TorchOrder: Boolean = java.lang.Boolean.getBoolean("graft.adam.torchOrder")
-}
-
 /** Adam with L2 weight decay, torch semantics
   * (ref: Simulation_Models/CNC_AE_model_selection.py:366 —
   * `optim.Adam(params, lr=lr, weight_decay=l2_lambda)`): decay is added
@@ -37,25 +18,13 @@ final class Adam(n: Int, lr: Double, weightDecay: Double = 0.0,
     t += 1
     val bc1 = 1.0 - math.pow(beta1, t)
     val bc2 = 1.0 - math.pow(beta2, t)
-    // torch-order probe hoists exactly what torch hoists per step
-    val stepSize = lr / bc1
-    val bc2Sqrt = math.sqrt(bc2)
     var i = 0
     while (i < n) {
       val g = grads(i) + weightDecay * params(i)
       m(i) = beta1 * m(i) + (1 - beta1) * g
       v(i) = beta2 * v(i) + (1 - beta2) * g * g
-      if (Adam.TorchOrder)
-        params(i) -= stepSize * m(i) / (math.sqrt(v(i)) / bc2Sqrt + eps)
-      else
-        params(i) -= lr * (m(i) / bc1) / (math.sqrt(v(i) / bc2) + eps)
+      params(i) -= lr * (m(i) / bc1) / (math.sqrt(v(i) / bc2) + eps)
       i += 1
-    }
-    if (Kernel.F32) {
-      // numerics probe (-Dgraft.kernel.f32=true): torch keeps Adam
-      // state in the params' dtype — round moments and params like
-      // every other stored tensor
-      Kernel.qa(m); Kernel.qa(v); Kernel.qa(params)
     }
   }
 }

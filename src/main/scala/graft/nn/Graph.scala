@@ -84,9 +84,6 @@ final case class GraphModel(graph: AeGraph, loss: Vector[LossTerm])
       rng: java.util.Random)
       : (Array[DenseMatrix[Double]], Array[Kernel.MlpRunner]) = {
     val (po, so) = offsets
-    // F32 probe no-ops unless -Dgraft.kernel.f32=true (the reference
-    // casts each batch to torch.float32 — Kernel.F32 scaladoc)
-    views.foreach(Kernel.qm)
     val vals = new Array[DenseMatrix[Double]](graph.nodes.length)
     val runners = new Array[Kernel.MlpRunner](graph.nodes.length)
     graph.nodes.zipWithIndex.foreach { case (n, i) =>
@@ -139,9 +136,9 @@ final case class GraphModel(graph: AeGraph, loss: Vector[LossTerm])
     val outGrads = scala.collection.mutable.Map[String, DenseMatrix[Double]]()
     loss.foreach { term =>
       val (l, gs) = term.compute(outs, views)
-      total = Kernel.q(total + Kernel.q(l))
+      total += l
       gs.foreach { case (k, g) =>
-        outGrads(k) = outGrads.get(k).map(_ + Kernel.qm(g)).getOrElse(Kernel.qm(g))
+        outGrads(k) = outGrads.get(k).map(_ + g).getOrElse(g)
       }
     }
 
@@ -183,7 +180,6 @@ final case class GraphModel(graph: AeGraph, loss: Vector[LossTerm])
         sOff += mlp.statCount
       case _ =>
     }
-    Kernel.BatchResult(Kernel.q(total), Kernel.qa(grads), Kernel.qa(bs),
-      views.head.rows)
+    Kernel.BatchResult(total, grads, bs, views.head.rows)
   }
 }

@@ -21,40 +21,6 @@ object Kernel {
   val BnMomentum = 0.1
   val NormEps = 1e-12
 
-  /** Float32 storage-rounding mode for the numerics-attribution probe
-    * (QUALITY_r11; VERDICT r10 ask #2). The reference trains in torch
-    * float32 on GPU (CNC_AE_model_selection.py:247-248 casts every
-    * batch to torch.float32); the engine's kernel is float64. With
-    * `-Dgraft.kernel.f32=true` every stored tensor — params at init,
-    * each layer's output, each backward dy, the gradient, loss values,
-    * Adam moments/params after the step, BN running stats — is rounded
-    * to float32 before the next op reads it, simulating fp32 STORAGE
-    * with higher-precision accumulation (the same contract as GPU
-    * SGEMM/tensor-core fp32-accumulate, so the measured drift is a
-    * faithful lower bound of full fp32 error). A JVM-wide system
-    * property, read once: the probe runs in its own JVM
-    * (BreadthCombine under the flag); the library default is
-    * float64 — no API surface changes. */
-  val F32: Boolean = java.lang.Boolean.getBoolean("graft.kernel.f32")
-
-  @inline private[nn] def q(v: Double): Double =
-    if (F32) v.toFloat.toDouble else v
-  private[nn] def qm(m: DenseMatrix[Double]): DenseMatrix[Double] = {
-    if (F32) {
-      val d = m.data
-      var i = 0
-      while (i < d.length) { d(i) = d(i).toFloat.toDouble; i += 1 }
-    }
-    m
-  }
-  private[nn] def qa(a: Array[Double]): Array[Double] = {
-    if (F32) {
-      var i = 0
-      while (i < a.length) { a(i) = a(i).toFloat.toDouble; i += 1 }
-    }
-    a
-  }
-
   // ---- parameter init ---------------------------------------------------
 
   /** Fresh (params, bnStats) for a TwoViewAe, torch-style init, seeded. */
@@ -80,7 +46,7 @@ object Kernel {
         p += 2 * dim; s += 2 * dim
       case _ =>
     }
-    (qa(params), qa(stats))
+    (params, stats)
   }
 
   // ---- one MLP stack ----------------------------------------------------
@@ -182,10 +148,6 @@ object Kernel {
               x = x *:* mask
             }
         }
-        // F32 probe: round the stored activation before the next layer
-        // reads it (fresh matrix at every arm; the dropout no-op arm
-        // re-rounds an already-rounded x — idempotent)
-        x = qm(x)
         i += 1
       }
       x
@@ -195,7 +157,7 @@ object Kernel {
       * same layout as params) and returns dL/dInput. */
     def backward(dyIn: DenseMatrix[Double],
         grads: Array[Double]): DenseMatrix[Double] = {
-      var dy = qm(dyIn)
+      var dy = dyIn
       var i = nL - 1
       while (i >= 0) {
         val off = pOffs(i)
@@ -267,7 +229,6 @@ object Kernel {
           case DropoutSpec(p) =>
             if (train && p > 0) dy = dy *:* cacheAux(i)
         }
-        dy = qm(dy)
         i -= 1
       }
       dy
@@ -339,10 +300,6 @@ object Kernel {
       ae.trunk.paramCount + ae.dec1.paramCount,
       stats, ae.trunk.statCount + ae.dec1.statCount, true, dropoutRng)
 
-    // F32 probe: the reference casts each batch to torch.float32
-    // (CNC_AE_model_selection.py:247-248) — targets included, so the
-    // loss compares fp32 against fp32 like torch does
-    qm(x1); qm(x2)
     val x12 = DenseMatrix.horzcat(x1, x2)
     val z = trunkR.forward(x12)
     val s1hat = d1R.forward(z)
@@ -358,7 +315,7 @@ object Kernel {
       ae.dec1.statCount)
     System.arraycopy(d2R.batchStats, 0, bs,
       ae.trunk.statCount + ae.dec1.statCount, ae.dec2.statCount)
-    BatchResult(q(q(l1) + q(l2)), qa(grads), qa(bs), x1.rows)
+    BatchResult(l1 + l2, grads, bs, x1.rows)
   }
 
   /** Eval-mode forward: (z, s1hat, s2hat) using running BN stats, no
@@ -374,7 +331,6 @@ object Kernel {
     val d2R = new MlpRunner(ae.dec2, params,
       ae.trunk.paramCount + ae.dec1.paramCount,
       stats, ae.trunk.statCount + ae.dec1.statCount, false, rng)
-    qm(x1); qm(x2)
     val z = trunkR.forward(DenseMatrix.horzcat(x1, x2))
     (z, d1R.forward(z), d2R.forward(z))
   }

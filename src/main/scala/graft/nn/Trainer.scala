@@ -21,19 +21,6 @@ import org.apache.spark.util.LongAccumulator
   */
 object Trainer {
 
-  /** Dropout mask-stream selector (QUALITY_r12 floor probe, VERDICT
-    * r11 ask #1b). The kernel's inverted dropout matches torch's
-    * SEMANTICS (Bernoulli keep-mask scaled by 1/(1−p),
-    * model_structures.py:185-347) but necessarily not torch's RNG
-    * STREAM (Philox on GPU vs java.util.Random here) — the mask
-    * sequence is an uncontrolled nuisance variable between the two
-    * implementations. `-Dgraft.dropout.stream=<k>` shifts ONLY the
-    * per-batch dropout seed (init and shuffle order untouched), so
-    * re-running the replayed best trial under k∈{0,1,2} measures how
-    * much the floor depends on the particular mask stream. 0 (the
-    * default) is bit-identical to the historical seeding. */
-  val DropoutStream: Long = java.lang.Long.getLong("graft.dropout.stream", 0L)
-
   final case class Config(lr: Double, weightDecay: Double = 0.0,
       batchSize: Int = 128, epochs: Int = 30, seed: Long = 21)
 
@@ -121,8 +108,7 @@ object Trainer {
         val snapshot = params.clone() // immutable copy shipped in closure
         val statsSnap = stats.clone()
         val modelRef = model
-        val dropSeed = cfg.seed * 1000003L + epoch * 1009L + b +
-          DropoutStream * 7919L
+        val dropSeed = cfg.seed * 1000003L + epoch * 1009L + b
         val res = sc.runJob(
           epochRdd,
           (it: Iterator[(Array[Double], Array[Double])]) => {
@@ -142,7 +128,6 @@ object Trainer {
               Kernel.BnMomentum * res.batchStats(i)
             i += 1
           }
-          Kernel.qa(stats) // no-op unless the F32 numerics probe is on
           epochLoss += res.loss * res.n
           seen += res.n
         }
@@ -208,8 +193,7 @@ object Trainer {
       val bcParams = sc.broadcast(params.clone())
       val bcStats = sc.broadcast(stats.clone())
       val modelRef = model
-      val seedBase = cfg.seed * 1000003L + epoch * 1009L +
-        DropoutStream * 7919L
+      val seedBase = cfg.seed * 1000003L + epoch * 1009L
       val partial = rdd.mapPartitionsWithIndex { (pid, it) =>
         val rows = it.toArray
         if (rows.isEmpty) Iterator.empty
@@ -274,7 +258,6 @@ object Trainer {
           Kernel.BnMomentum * aggStats(i)
         i += 1
       }
-      Kernel.qa(stats) // no-op unless the F32 numerics probe is on
       losses += aggLoss
       bcParams.destroy(); bcStats.destroy()
     }

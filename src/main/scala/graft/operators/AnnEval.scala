@@ -5,12 +5,11 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Shared ANN answer-quality methodology — ONE implementation of the
-  * exact ground truth and the tie-robust threshold-recall metric, used
-  * by both the per-round blow-up probe (`graft.AnnRecallProbe`, whose
-  * measurements back SCALE.md §ANN recall) and the CI guard
-  * (`BlowupRecallSpec`). Two independent copies of this logic would
-  * drift — a tie-handling or eps change in one would silently unpin
-  * the other.
+  * exact ground truth and the tie-robust threshold-recall metric behind
+  * both the blow-up recall figures in SCALE.md §ANN recall and the CI
+  * guard (`BlowupRecallSpec`). Two independent copies of this logic
+  * would drift — a tie-handling or eps change in one would silently
+  * unpin the other.
   *
   * Threshold recall@k: an approx neighbor is a hit when its TRUE score
   * is at least as good as the query's k-th exact score. On blown

@@ -439,22 +439,17 @@ object SimilarityOps {
     * PQ residuals — the y6/y7 path — carry the rest). */
   val MaxIvfCells = 4096
 
-  /** Flat-fit ceiling for the IVF search quantizer — the search twin of
-    * [[dedupQuantCap]] (probe hook `-Dgraft.ivf.quantCap`). Past the
-    * ceiling the honest geometry is [[scaledIvfQuantizer]]'s two-level
-    * fit at k = ⌈√n⌉ uncapped: per-query scanned candidates stay at the
-    * nProbe·n/k = nProbe·√n envelope instead of growing linearly with
-    * n/cap, and assignment stays (k1+k2)·d. AnnScaleProbe measures both
-    * arms at a forced-low cap (BENCH_SCALES §r13). */
-  def ivfQuantCap: Int =
-    sys.props.get("graft.ivf.quantCap").map(_.toInt).getOrElse(MaxIvfCells)
-
   /** IVF coarse-quantizer geometry for dataset `d`:
-    * k = min(max(8, ⌈√n⌉), [[ivfQuantCap]]) cells, centroids from the
+    * k = min(max(8, ⌈√n⌉), [[MaxIvfCells]]) cells, centroids from the
     * fit-once (warehouse-persisted) seeded KMeans model, as a plain
     * matrix. The y5/y7 query bodies and their oracle generators share
     * EXACTLY this — the centroid numbers in the oracle's literals are
-    * the numbers the plan embedded. */
+    * the numbers the plan embedded. Past the ceiling the honest geometry
+    * is [[scaledIvfQuantizer]]'s two-level fit at k = ⌈√n⌉ uncapped:
+    * per-query scanned candidates stay at the nProbe·n/k = nProbe·√n
+    * envelope instead of growing linearly with n/4096, and assignment
+    * stays (k1+k2)·d (both arms measured at a forced-low ceiling in
+    * BENCH_SCALES §r13). */
   def ivfCentroids(s: SparkSession, d: String): Seq[Seq[Double]] = {
     import graft.ml.Clustering
     val e = checkedEmbeddings(s, d)
@@ -462,7 +457,7 @@ object SimilarityOps {
         transform(col("embedding"), x => x.cast("double")).as("features"))
     val n = cachedCount(s"emb:$d", e)
     val k = math.min(math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt),
-      ivfQuantCap)
+      MaxIvfCells)
     val warehouse = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     // dataTag, not pathTag: the persisted model must go stale with the
     // data — blow-up probes rewrite the same /tmp dir, and a path-keyed
@@ -482,7 +477,7 @@ object SimilarityOps {
     * n = 10⁹, trivially driver-resident) exactly like the flat path,
     * so nProbe semantics carry over unchanged and only the ASSIGNMENT
     * differs (hierarchical argmin vs flat argmin — boundary vectors
-    * can land one cell over; AnnScaleProbe measures the end-to-end
+    * can land one cell over; BENCH_SCALES §r13 records the end-to-end
     * recall cost of that approximation alongside the scan-volume win).
     * y7 composes identically: the cell filter swaps in, PQ residual
     * scoring is untouched. */
@@ -658,32 +653,12 @@ object SimilarityOps {
     * k-means so clusters are small enough for the full pairwise sim
     * matrix; contrast [[ivfCentroids]]' k = √n, a SEARCH trade that at
     * blow-up scale produced √n-sized cells where the banded fallback
-    * measurably missed interleaved duplicate groups — SemDedupProbe /
-    * BENCH_SCALES §r12). */
+    * measurably missed interleaved duplicate groups — BENCH_SCALES
+    * §r12). */
   def dedupKTotal(n: Long): Int = math.max(8, math.ceil(n / 256.0).toInt)
 
-  /** Flat-fit ceiling for the dedup quantizer. Below it the fit is the
-    * full-corpus KMeans of [[dedupCentroids]] (k·d flat argmin — fine
-    * while k is small); above it [[scaledDedupQuantizer]]'s sampled
-    * two-level fit takes over with NO ceiling on total cell count
-    * (r12's one declared scale gap, closed r13). Overridable via
-    * `-Dgraft.semdedup.quantCap` so the blow-up probes can FORCE the
-    * over-ceiling regime at corpus sizes this box can hold
-    * (SemDedupProbe runs both arms at a forced-low cap and measures
-    * the banded arm's duplicate misses against the scaled fit's). */
-  def dedupQuantCap: Int =
-    sys.props.get("graft.semdedup.quantCap").map(_.toInt)
-      .getOrElse(MaxIvfCells)
-
-  /** Probe hook: `-Dgraft.semdedup.scaledFit=false` reproduces the
-    * pre-r13 ceiling behavior (flat fit pinned AT the cap, cells
-    * regrow, the verdict pair join degrades to its banded arm) — the
-    * measured-loss baseline the sampled fit is judged against. */
-  def dedupScaledFit: Boolean =
-    sys.props.get("graft.semdedup.scaledFit").forall(_.toBoolean)
-
-  /** Flat dedup quantizer (k ≤ [[dedupQuantCap]]): full-corpus seeded
-    * KMeans at k = [[dedupKTotal]] capped to the ceiling — the
+  /** Flat dedup quantizer: full-corpus seeded KMeans at
+    * k = [[dedupKTotal]] capped to [[MaxIvfCells]] — the
     * oracle-replayable path every driver-scale corpus takes (k is 8 at
     * sf0.01; the literal centroid matrix in y8's oracle comes from
     * here). */
@@ -693,7 +668,7 @@ object SimilarityOps {
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("features"))
     val n = cachedCount(s"emb:$d", e)
-    val k = math.min(dedupKTotal(n), dedupQuantCap)
+    val k = math.min(dedupKTotal(n), MaxIvfCells)
     val warehouse = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
     val model = Clustering.kmeansModelCached(s"sdd:$d:$k", e, k = k,
       seed = 42, maxIter = 5, persistPath = Some(s"$warehouse/graft_sdd_" +
@@ -701,7 +676,7 @@ object SimilarityOps {
     model.clusterCenters.toSeq.map(_.toArray.toSeq)
   }
 
-  /** Scaled dedup quantizer (k > [[dedupQuantCap]]): the sampled
+  /** Scaled dedup quantizer (k past the flat ceiling): the sampled
     * two-level fit at k = [[dedupKTotal]] with no ceiling —
     * [[graft.ml.Quantizer]] holds the fit (bounded hash samples,
     * distributed per-cell sub-fits) and the scale arithmetic; the
@@ -762,20 +737,20 @@ object SimilarityOps {
     * layout SemDeDup itself prescribes (one k-means pass per corpus
     * snapshot, then all dedup work happens on the assignment table).
     *
-    * Quantizer routing: k = [[dedupKTotal]] within [[dedupQuantCap]]
-    * takes the flat oracle-replayable fit (every driver-scale corpus);
-    * past the cap the sampled two-level fit keeps k ∝ n — unless the
-    * `scaledFit=false` probe arm pins the old capped behavior. The
-    * cache key carries the routing knobs so probe arms in one JVM
-    * never read each other's frames. */
-  def cachedSemDedupRanked(s: SparkSession, d: String): DataFrame =
-    sigCache.getOrElseUpdate(
-      s"semdedup:$d:$dedupQuantCap:$dedupScaledFit", {
+    * Quantizer routing: k = [[dedupKTotal]] within the flat-fit
+    * ceiling `cap` takes the flat oracle-replayable fit (every
+    * sf-scale corpus); past it [[scaledDedupQuantizer]]'s sampled
+    * two-level fit keeps k ∝ n with NO ceiling on total cell count. A
+    * low `cap` forces the over-ceiling regime at corpus sizes one box
+    * can hold. The cache key carries `cap` so routings in one JVM never
+    * read each other's frames. */
+  def cachedSemDedupRanked(s: SparkSession, d: String,
+      cap: Int = MaxIvfCells): DataFrame =
+    sigCache.getOrElseUpdate(s"semdedup:$d:$cap", {
       val e = checkedEmbeddings(s, d)
       val n = cachedCount(s"emb:$d", e.select(col("vec_id")))
       val ranked =
-        if (dedupKTotal(n) <= dedupQuantCap || !dedupScaledFit)
-          semDedupRanked(e, dedupCentroids(s, d))
+        if (dedupKTotal(n) <= cap) semDedupRanked(e, dedupCentroids(s, d))
         else semDedupRankedScaled(e, scaledDedupQuantizer(s, d))
       ranked.persist(StorageLevel.MEMORY_AND_DISK)
     })
@@ -800,7 +775,7 @@ object SimilarityOps {
     * extra exchange. The band is exact on a PILE (mutual near-dups:
     * any predecessor triggers — SemDedupSpec pins banded ≡ exact
     * there) but MEASURABLY misses when distinct duplicate groups
-    * interleave in ccos order (SemDedupProbe quantified this on
+    * interleave in ccos order (BENCH_SCALES §r12 quantified this on
     * √n-sized cells before the k-rule fix: 793/2000 groups kept ≥2
     * members vs 4 under the exact triangle — which is WHY the
     * quantizer now keeps cells small instead of leaning on the band;
@@ -1199,7 +1174,7 @@ object SimilarityOps {
     // semantic dedup — k-means cells from a DEDUP-sized quantizer
     // (k ≈ n/256 so the exact within-cell triangle is the operating
     // regime, the paper's own sizing; y5's √n search quantizer measured
-    // 793/2000 missed groups under the banded fallback — SemDedupProbe),
+    // 793/2000 missed groups under the banded fallback — BENCH_SCALES),
     // within-cell pairwise cosine over tau, keep the least-centroid-
     // similar representative of every duplicate group. Complements the
     // LEXICAL dedup family (x6 MinHash / x7+x13 SimHash / x8 Jaccard)

@@ -743,7 +743,13 @@ object TextOps {
 
   /** The exact order-statistic CONTROL arm of the quantile twins (the
     * part a 100 TB run drops): the ceil(p·n)-th value per key over an
-    * input `(key, v)`. Returns `(key, x<label>…)`. */
+    * input `(key, v)`. Returns `(key, x<label>…)`.
+    *
+    * Preconditions: the per-key counts are INNER-joined back on `key`,
+    * so rows with a NULL key are dropped (they get no output row); and
+    * that counts frame is forced through `broadcast()`, so the number of
+    * distinct keys must fit a broadcast table, held whole in memory on
+    * every node. */
   private[graft] def exactOrderStats(df: DataFrame, key: String,
       ps: Seq[(String, Double)]): DataFrame = {
     val wRk = Window.partitionBy(key).orderBy("v")
@@ -1111,6 +1117,12 @@ object TextOps {
     // partition, a 100 TB near-dup graph grows with its bytes, and the
     // hash layout lets every round's join reuse bi's partitioning
     // instead of re-exchanging the (large) edge side.
+    // Skew caveat: hashing on `v` sends ALL of a vertex's edges to one
+    // partition, so a hub vertex (a near-dup cluster of millions around
+    // one boilerplate doc) makes one task per round as large as its
+    // degree. AQE's skew-join split cannot help — this side is a
+    // checkpoint scan, not a shuffle read. The layout is balanced only
+    // while the max degree stays well under 2·nEdges / partitions.
     val bi = truncate(e0.select(col("doc_a").as("u"), col("doc_b").as("v"))
       .union(e0.select(col("doc_b").as("u"), col("doc_a").as("v")))
       .repartition(

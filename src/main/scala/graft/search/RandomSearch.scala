@@ -80,8 +80,8 @@ object RandomSearch {
     * unreproduced search behavior). This is the deterministic,
     * replay-compatible counterpart: a pure function of (center, seed) —
     * no adaptive state inside a round, so refine trials parallelize
-    * across workers exactly like base trials (`BreadthTrials`), and
-    * the sequential bookkeeping replays (`RefineReplaySpec`).
+    * across workers exactly like base trials, and the sequential
+    * bookkeeping replays (`RefineReplaySpec`).
     *
     * Geometry: continuous hypers move by U(−1,1)·span/shrink in log
     * space, clipped to the published bounds (shrink=8 → lr explores

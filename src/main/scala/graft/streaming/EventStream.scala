@@ -36,7 +36,18 @@ object EventStream {
     * rebuild, same pattern as `SPARK_GRAFT_SHUFFLE`. Local default
     * stays 8 so the driver's bench is comparable round over round. */
   val DefaultStateShards: Int =
-    sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "8").toInt
+    stateShardsFrom(sys.env.get("SPARK_GRAFT_STATE_SHARDS"))
+
+  /** Parses a `SPARK_GRAFT_STATE_SHARDS` value (absent → 8). A malformed
+    * or non-positive value fails with a message naming the variable and
+    * the value, not a bare NumberFormatException from object init. */
+  private[graft] def stateShardsFrom(raw: Option[String]): Int =
+    raw.fold(8) { v =>
+      val n = v.toIntOption
+      require(n.exists(_ > 0),
+        s"SPARK_GRAFT_STATE_SHARDS must be a positive integer, got '$v'")
+      n.get
+    }
 
   /** Live-key estimate feeding `StateStores.configure` (the measured
     * in-heap/RocksDB rule) for the engine's BOUNDED AvailableNow

@@ -30,6 +30,12 @@ class BenchLineSpec extends AnyFunSuite {
       try Some(mapper.readTree(l)) catch { case _: Throwable => None }
     }.filter(n => n.isObject && n.has("metric"))
 
+  test("jstr output round-trips through a JSON parser") {
+    val raw = "a\tb\rc\nd\"e\\f\u0001g"
+    assert(mapper.readValue(Bench.jstr(raw), classOf[String]) == raw)
+    assert(Bench.jstr("\t\r\n") == "\"\\t\\r\\n\"")
+  }
+
   test("compact line fits the tail budget with the full current query set") {
     val line = Bench.compactLine(results, "sf0.1", extra = ""","failed":0""")
     assert(line.length <= Bench.Budget,

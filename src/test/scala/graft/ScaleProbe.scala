@@ -1,19 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Synthetic decade blow-up of the text/ANN/streaming tables, for probing
-  * query-cost growth BEYOND the driver-provided sf0.1 (BENCH_SCALES.md
-  * stops there; the 100 TB question is whether the next decades stay
-  * linear).
-  *
-  *   sbt "runMain graft.ScaleProbe /root/testdata/sf0.1 /tmp/graft_sfprobe10 10"
-  *
-  * Writes `documents/embeddings/events.parquet` = `factor` deterministic
-  * copies of the source tables, built so the CORPUS STATISTICS stay
-  * scale-invariant — i.e. growth mirrors a larger crawl of the same
-  * distribution rather than an artifact-ridden duplication stress:
+/** Synthetic decade blow-up of the text/ANN/streaming tables: `factor`
+  * deterministic copies of the source tables, built so the CORPUS
+  * STATISTICS stay scale-invariant — growth mirrors a larger crawl of
+  * the same distribution rather than an artifact-ridden duplication
+  * stress. The blow-up decades in BENCH_SCALES.md and SCALE.md were
+  * measured on corpora written by exactly these functions; the specs
+  * (ScaleProbeSpec, BlowupRecallSpec) pin their invariants.
   *
   *  - documents: copy k keeps copy 0's text verbatim only for k=0; every
   *    other copy salts EACH WORD with a (word, k)-keyed suffix. Token
@@ -38,7 +34,6 @@ import org.apache.spark.sql.functions._
   *
   * Determinism: pure column arithmetic on (value, copy index) — no RNG,
   * no wall clock — so two runs produce byte-identical content rowsets.
-  * Probe timings over the result land in BENCH_SCALES.md §beyond-sf0.1.
   */
 object ScaleProbe {
 
@@ -98,48 +93,4 @@ object ScaleProbe {
         .withColumn("user_id", col("user_id") + lit(k * Stride))
         .select(ev.columns.map(col).toSeq: _*)
     }.reduce(_.unionByName(_))
-
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val dest = args(1)
-    val factor = args(2).toInt
-    // optional 4th arg: comma-list of tables to write (default all).
-    // Factors past 1000 are documents-only: blowUpDocuments fans out
-    // via crossJoin (factor-proof), while the embeddings/events blow-ups
-    // still build factor-way unions — and the fourth-decade probes
-    // (r12) only need the text corpus.
-    val tables = if (args.length > 3) args(3).split(",").map(_.trim).toSet
-                 else Set("documents", "embeddings", "events")
-    // a typo'd table name would silently write nothing and downstream
-    // probes would fail much later on the missing parquet (ADVICE r12)
-    require(tables.nonEmpty &&
-      tables.subsetOf(Set("documents", "embeddings", "events")),
-      s"unknown table(s) ${tables.mkString(",")}: expected a comma-list " +
-      "drawn from documents,embeddings,events")
-    require(factor >= 1 && factor <= 10000, s"unreasonable factor $factor")
-    require(factor <= 1000 || tables == Set("documents"),
-      s"factor $factor > 1000 is documents-only (pass 'documents')")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def write(df: DataFrame, name: String, parts: Int): Unit = {
-      df.repartition(parts)
-        .write.mode("overwrite").parquet(s"$dest/$name.parquet")
-      println(s"[scaleprobe] $name x$factor -> $dest/$name.parquet")
-    }
-    val parts = math.min(256, math.max(cpus.toInt, factor / 4))
-    if (tables("documents"))
-      write(blowUpDocuments(Tables.documents(spark, src), factor), "documents", parts)
-    if (tables("embeddings"))
-      write(blowUpEmbeddings(Tables.embeddings(spark, src), factor), "embeddings", parts)
-    if (tables("events"))
-      write(blowUpEvents(Tables.events(spark, src), factor), "events", parts)
-    spark.stop()
-  }
 }

@@ -8,6 +8,23 @@ import graft.streaming.{EventStream, StateStores}
   * chosen provider. */
 class StateStoresSpec extends SparkSpec {
 
+  describe("SPARK_GRAFT_STATE_SHARDS parsing") {
+
+    it("takes a positive integer and defaults to 8 when unset") {
+      assert(EventStream.stateShardsFrom(None) == 8)
+      assert(EventStream.stateShardsFrom(Some("32")) == 32)
+    }
+
+    it("rejects a malformed or non-positive value, naming both") {
+      Seq("eight", "", "0", "-4", "2.5").foreach { bad =>
+        val e = intercept[IllegalArgumentException](
+          EventStream.stateShardsFrom(Some(bad)))
+        assert(e.getMessage.contains("SPARK_GRAFT_STATE_SHARDS") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+    }
+  }
+
   describe("StateStores sizing rule") {
 
     it("reproduces the measured single-box verdicts") {

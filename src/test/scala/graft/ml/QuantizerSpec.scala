@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** The r13 quantizer-ceiling lift: sampled two-level k ∝ n fit
   * (ml.Quantizer) + the native assignment/ccos kernels it rides on.
-  * SemDedupProbe measures the RECALL half (forced-regime arms on the
+  * BENCH_SCALES §r13 records the RECALL half (forced-regime arms on the
   * blow-up corpora); this pins the deterministic semantics. */
 class QuantizerSpec extends SparkSpec {
 
@@ -29,9 +29,6 @@ class QuantizerSpec extends SparkSpec {
     // past the old cap the rule keeps scaling instead of pinning
     assert(SimilarityOps.dedupKTotal(16_800_000L) == 65625)
     assert(SimilarityOps.dedupKTotal(1_000_000_000L) == 3906250)
-    // and the DEFAULT routing hands those to the scaled fit
-    assert(SimilarityOps.dedupQuantCap == SimilarityOps.MaxIvfCells)
-    assert(SimilarityOps.dedupScaledFit)
   }
 
   it("TwoLevelNearestCell with k1=1 degenerates to the flat argmin " +
@@ -129,7 +126,6 @@ class QuantizerSpec extends SparkSpec {
 
   it("scaled IVF quantizer keeps the search geometry: k = ceil(sqrt(n)) " +
       "uncapped, two-level shape") {
-    assert(SimilarityOps.ivfQuantCap == SimilarityOps.MaxIvfCells)
     val q = SimilarityOps.scaledIvfQuantizer(spark, "/root/testdata/sf0.001")
     // n = 500 -> kTotal = 23 -> k1 = 5, k2 = 5
     assert(q.k1 == 5 && q.k2 == 5 && q.k == 25)
@@ -140,35 +136,33 @@ class QuantizerSpec extends SparkSpec {
   it("forced over-ceiling routing: cachedSemDedupRanked takes the " +
       "scaled fit and the kept set still satisfies the pair rule") {
     val d = "/root/testdata/sf0.001" // n=500, kTotal=8
-    val prev = sys.props.get("graft.semdedup.quantCap")
-    try {
-      sys.props("graft.semdedup.quantCap") = "4" // force 8 > 4 → scaled
-      val ranked = SimilarityOps.cachedSemDedupRanked(spark, d)
-      val cells = ranked.select("cell").distinct().count()
-      assert(cells > 4 && cells <= 9, // k1=3, k2=3 → up to 9 cells
-        s"expected the two-level 3x3 geometry, got $cells cells")
-      val v = SimilarityOps.semDedupVerdicts(ranked)
-      // paper invariant: among kept members of one cell, no pair over tau
-      val kept = v.filter(col("kept") === 1L)
-        .join(ranked.select("vec_id", "embedding"), "vec_id")
-      val overTau = kept.as("a").join(kept.as("b"),
-          col("a.cell") === col("b.cell") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .filter(SimilarityOps.fastCosine(col("a.embedding"),
-          col("b.embedding")) > SimilarityOps.SemDedupTau)
-        .count()
-      assert(overTau == 0L,
-        s"$overTau kept same-cell pairs exceed tau — pair rule violated")
-      // and every non-empty cell keeps its rank-1 representative
-      val rank1NotKept = v.filter(col("kept") === 0L)
-        .join(ranked.filter(col("rk") === 1).select("vec_id"), "vec_id")
-        .count()
-      assert(rank1NotKept == 0L)
-    } finally {
-      prev match {
-        case Some(p) => sys.props("graft.semdedup.quantCap") = p
-        case None => sys.props.remove("graft.semdedup.quantCap")
-      }
-    }
+    // the DEFAULT routing cap is the flat ceiling MaxIvfCells: the default
+    // call and an explicit MaxIvfCells call share one cap-keyed frame,
+    // and the IVF ceiling does not bind at n = 500 (k = ⌈√500⌉ = 23)
+    assert(SimilarityOps.cachedSemDedupRanked(spark, d) eq
+      SimilarityOps.cachedSemDedupRanked(spark, d, SimilarityOps.MaxIvfCells))
+    assert(SimilarityOps.ivfCentroids(spark, d).length == 23)
+    // force 8 > 4 → scaled
+    val ranked = SimilarityOps.cachedSemDedupRanked(spark, d, cap = 4)
+    val cells = ranked.select("cell").distinct().count()
+    assert(cells > 4 && cells <= 9, // k1=3, k2=3 → up to 9 cells
+      s"expected the two-level 3x3 geometry, got $cells cells")
+    val v = SimilarityOps.semDedupVerdicts(ranked)
+    // paper invariant: among kept members of one cell, no pair over tau
+    val kept = v.filter(col("kept") === 1L)
+      .join(ranked.select("vec_id", "embedding"), "vec_id")
+    val overTau = kept.as("a").join(kept.as("b"),
+        col("a.cell") === col("b.cell") &&
+          col("a.vec_id") < col("b.vec_id"))
+      .filter(SimilarityOps.fastCosine(col("a.embedding"),
+        col("b.embedding")) > SimilarityOps.SemDedupTau)
+      .count()
+    assert(overTau == 0L,
+      s"$overTau kept same-cell pairs exceed tau — pair rule violated")
+    // and every non-empty cell keeps its rank-1 representative
+    val rank1NotKept = v.filter(col("kept") === 0L)
+      .join(ranked.filter(col("rk") === 1).select("vec_id"), "vec_id")
+      .count()
+    assert(rank1NotKept == 0L)
   }
 }

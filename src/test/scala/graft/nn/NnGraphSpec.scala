@@ -215,7 +215,7 @@ class NnGraphSpec extends SparkSpec {
       assert(Trainer.gradChunksFor(45_000_000L) == 6)
       // the REAL widest family at the exact TCGA widths: MOCSS at
       // (20531, 1046) is 97.2 M params — auto-slicing must engage with
-      // 12 slices of <= 64 MiB (GradSliceProof measured the bound:
+      // 12 slices of <= 64 MiB (a since-removed probe measured the bound:
       // sliced completes at -Xmx8g where the monolithic reduce OOMs)
       val mocss = graft.nn.ArchZoo.mocss(20531, 1046, 1.0).model
       assert(mocss.paramCount == 97_169_042L, s"=${mocss.paramCount}")

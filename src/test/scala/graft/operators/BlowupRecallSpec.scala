@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 /** CI guard for the SCALE.md §ANN-recall methodology and conclusion:
   * on a statistics-invariant blow-up (every vector gains factor−1
   * distinct near-copies) the cosine ANN arms must keep finding the
-  * true neighbors. Recall is the tie-robust THRESHOLD form the probe
-  * (`AnnRecallProbe`) established: a returned neighbor is a hit when
+  * true neighbors. Recall is the tie-robust THRESHOLD form the recall
+  * probe behind SCALE.md established: a returned neighbor is a hit when
   * its TRUE cosine is at least as good as the query's k-th exact
   * cosine. Plain id-set overlap measures tie ORDERING here, not index
   * quality — by construction each query's top-k is drawn from near-

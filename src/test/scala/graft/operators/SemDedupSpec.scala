@@ -63,7 +63,7 @@ class SemDedupSpec extends SparkSpec {
     // Regression guard for the measured r12 recall failure: assigning
     // over ivfCentroids' k = sqrt(n) produces sqrt(n)-sized cells whose
     // banded fallback missed 793/2000 duplicate groups at x100
-    // (SemDedupProbe). dedupCentroids must keep the n/256 rule so the
+    // (BENCH_SCALES §r12). dedupCentroids must keep the n/256 rule so the
     // exact triangle stays the operating regime. At sf0.001 (n = 500)
     // the two rules are distinguishable: dedup k = max(8, ceil(500/256))
     // = 8 vs search k = ceil(sqrt(500)) = 23.

@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.nn.{Trainer, TwoViewAe}
 
 /** Pins the soundness of the parallel full-breadth search
-  * (`BreadthTrials` workers + `RandomSearch.replay` combine):
+  * (per-trial workers + `RandomSearch.replay` combine):
   * a replay of worker-computed per-trial fold losses must reproduce a
   * live sequential `search` bit-for-bit — same pruning decisions, same
   * avg losses, same best trial — and a PREFIX replay must equal a
@@ -54,7 +54,7 @@ class BreadthReplaySpec extends SparkSpec {
       "search that prunes mid-CV (QUALITY_r11 cv=5 confirmation)") {
     // At cv=3/warmup=2 pruning only fires after the LAST fold, so the
     // cases above never exercise truncation. At cv=5 the live walk can
-    // stop after fold 3 or 4 while a BreadthTrials worker computes all
+    // stop after fold 3 or 4 while a per-trial worker computes all
     // 5 — the replay must read exactly the folds the sequential walk
     // visits and no more. Pad the truncated live vectors with NaN: if
     // the replay ever reads a fold the live search skipped, avgLoss

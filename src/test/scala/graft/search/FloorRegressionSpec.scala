@@ -32,8 +32,21 @@ class FloorRegressionSpec extends SparkSpec {
 
   private val logs = "logs"
 
-  private def read(file: String): Map[Int, Seq[Double]] =
-    graft.RefineTrials.readLosses(s"$logs/$file")
+  /** Worker loss file lines "t=<i> [cv=<k> ]losses=<l0>,<l1>,…" by
+    * trial. The optional `cv=` tag (the breadth workers' lines carry it)
+    * must agree with the refine path's fixed cv=3. */
+  private def read(file: String): Map[Int, Seq[Double]] = {
+    val cv = 3
+    val rx = """t=(\d+) (?:cv=(\d+) )?losses=([0-9eE+\-.,NaN]+)""".r.unanchored
+    val src = scala.io.Source.fromFile(s"$logs/$file")
+    try src.getLines()
+      .collect { case rx(t, cvTag, ls) =>
+        if (cvTag != null) require(cvTag.toInt == cv,
+          s"loss file trial $t was computed at cv=$cvTag; refine is cv=$cv")
+        t.toInt -> ls.split(",").map(_.toDouble).toSeq }
+      .toMap
+    finally src.close()
+  }
 
   private def dense(byTrial: Map[Int, Seq[Double]], n: Int): Seq[Seq[Double]] =
     (0 until n).map(byTrial)
