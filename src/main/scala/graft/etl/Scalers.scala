@@ -22,12 +22,14 @@ object Scalers {
 
   final case class MinMaxState(min: Array[Double], max: Array[Double])
 
-  /** Single-pass elementwise (min, max) over Array[Double] rows. */
-  object MinMaxAgg extends Aggregator[Seq[Double], MinMaxState, MinMaxState] {
+  /** Single-pass elementwise (min, max) over Array[Double] rows. Typed
+    * on Array, not Seq: Spark deserializes a Seq column as a List, whose
+    * `length` and `apply(i)` are O(width), making each row O(width²). */
+  object MinMaxAgg extends Aggregator[Array[Double], MinMaxState, MinMaxState] {
     override def zero: MinMaxState = MinMaxState(Array.empty, Array.empty)
 
-    override def reduce(b: MinMaxState, a: Seq[Double]): MinMaxState =
-      if (b.min.isEmpty) MinMaxState(a.toArray, a.toArray)
+    override def reduce(b: MinMaxState, a: Array[Double]): MinMaxState =
+      if (b.min.isEmpty) MinMaxState(a.clone(), a.clone())
       else {
         var i = 0
         while (i < a.length) {
@@ -62,7 +64,7 @@ object Scalers {
     * width-sized (min[], max[]) pair reaches the driver. */
   def fit(df: DataFrame, featuresCol: String = "features"): DataFrame = {
     import df.sparkSession.implicits._
-    val st = df.select(col(featuresCol)).as[Seq[Double]]
+    val st = df.select(col(featuresCol)).as[Array[Double]]
       .select(MinMaxAgg.toColumn)
       .head()
     df.sparkSession.createDataFrame(Seq((st.min.toSeq, st.max.toSeq)))

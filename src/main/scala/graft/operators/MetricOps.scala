@@ -436,8 +436,8 @@ object MetricOps {
     // (the one-hot assignment-matrix column sums the dormant loss sees).
     // Distributed shape: ONE hash-agg to (view,label) counts (k·2 rows),
     // a tiny window for the per-view mass, and a broadcast 1-row k frame
-    // — nothing driver-side. DormantLossesSpec pins this formula to
-    // DormantLosses.negEntropy on a one-hot matrix of the same labels.
+    // — nothing driver-side. PlanSpec pins this formula to a local
+    // log k + Σ p log p over a one-hot matrix of the same labels.
     QueryDef(
       "a14_usage_entropy",
       (s, d) => {
@@ -471,8 +471,8 @@ object MetricOps {
     // embedding half, long-form (i, j, cov). One scan, sixteen
     // covar_samp aggregates in a single partial+final hash-agg, then a
     // plan-time stack to rows — no second pass, no driver math.
-    // DormantLossesSpec pins covar_samp against the distributedGram
-    // treeAggregate path on centered columns.
+    // PlanSpec pins covar_samp against a local centred sample
+    // covariance of the same 8 columns.
     QueryDef(
       "a15_cca_cov",
       (s, d) => {

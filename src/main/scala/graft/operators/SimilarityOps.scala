@@ -444,11 +444,11 @@ object SimilarityOps {
     * fit-once (warehouse-persisted) seeded KMeans model, as a plain
     * matrix. The y5/y7 query bodies and their oracle generators share
     * EXACTLY this — the centroid numbers in the oracle's literals are
-    * the numbers the plan embedded. Past the ceiling the honest geometry
-    * is [[scaledIvfQuantizer]]'s two-level fit at k = ⌈√n⌉ uncapped:
-    * per-query scanned candidates stay at the nProbe·n/k = nProbe·√n
-    * envelope instead of growing linearly with n/4096, and assignment
-    * stays (k1+k2)·d (both arms measured at a forced-low ceiling in
+    * the numbers the plan embedded. Past the ceiling, per-query scanned
+    * candidates grow linearly with n/4096; a two-level fit at k = ⌈√n⌉
+    * uncapped ([[graft.ml.Quantizer.fitTwoLevel]], the dedup path's
+    * machinery) would hold them at the nProbe·√n envelope with
+    * (k1+k2)·d assignment (both arms measured at a forced-low ceiling in
     * BENCH_SCALES §r13). */
   def ivfCentroids(s: SparkSession, d: String): Seq[Seq[Double]] = {
     import graft.ml.Clustering
@@ -466,31 +466,6 @@ object SimilarityOps {
       seed = 42, maxIter = 5, persistPath = Some(s"$warehouse/graft_ivf_" +
         s"${graft.etl.ScaleUtils.dataTag(s"$d/embeddings.parquet")}_k$k"))
     model.clusterCenters.toSeq.map(_.toArray.toSeq)
-  }
-
-  /** Scaled IVF quantizer (search side): the sampled two-level fit at
-    * k = ⌈√n⌉ with NO ceiling — same [[graft.ml.Quantizer]] machinery
-    * as the dedup path, search geometry instead of dedup geometry.
-    * Corpus assignment is [[graft.functions.TwoLevelNearestCell]]
-    * ((k1+k2)·d ≈ 2·n^¼·d per vector); query routing ranks the flat
-    * k-row SUB-centroid table driver-side (k = √n rows — ~32 K at
-    * n = 10⁹, trivially driver-resident) exactly like the flat path,
-    * so nProbe semantics carry over unchanged and only the ASSIGNMENT
-    * differs (hierarchical argmin vs flat argmin — boundary vectors
-    * can land one cell over; BENCH_SCALES §r13 records the end-to-end
-    * recall cost of that approximation alongside the scan-volume win).
-    * y7 composes identically: the cell filter swaps in, PQ residual
-    * scoring is untouched. */
-  def scaledIvfQuantizer(s: SparkSession, d: String): graft.ml.Quantizer.TwoLevel = {
-    val e = checkedEmbeddings(s, d)
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("features"))
-    val n = cachedCount(s"emb:$d", e)
-    val kTotal = math.max(8, math.ceil(math.sqrt(n.toDouble)).toInt)
-    val warehouse = s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.ml.Quantizer.fitTwoLevelCached(s"ivf2l:$d", e, n, kTotal,
-      persistPath = Some(s"$warehouse/graft_ivf2l_" +
-        graft.etl.ScaleUtils.dataTag(s"$d/embeddings.parquet")))
   }
 
   /** Per-row nearest-centroid cell over the plan-time centroid matrix:

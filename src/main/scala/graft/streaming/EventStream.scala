@@ -81,7 +81,12 @@ object EventStream {
     * raises the width back — it is one conf, fixed per query at first
     * start. The session conf is restored after the run (the shard
     * count is captured at query START, so the restore cannot race the
-    * batches). */
+    * batches).
+    *
+    * Precondition: one stream per session at a time. The width is set
+    * on the shared session conf, so any other query that starts on the
+    * same session inside `body` plans with `n` shuffle partitions, and
+    * two overlapping calls can restore each other's value. */
   private[graft] def withStateShards[A](spark: SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)

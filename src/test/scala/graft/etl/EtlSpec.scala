@@ -5,8 +5,7 @@ import org.apache.spark.sql.functions._
 
 class EtlSpec extends SparkSpec {
 
-  private val simFile =
-    "/root/reference/Simulation_Data/miRNA_seq_2_groups_0.2_diff.csv"
+  private def simFile = graft.SimFixture.path
 
   describe("OmicsReader.readTransposed (S1)") {
     lazy val m = OmicsReader.readTransposed(spark, simFile)
@@ -19,7 +18,7 @@ class EtlSpec extends SparkSpec {
 
     it("keeps file feature order and exact values (pandas .T parity)") {
       // first data row of the file: "mmu-let-7c-2-3p" with value 71 for
-      // sample Group1.Time1.Rep1 (verified against the raw TSV)
+      // sample Group1.Time1.Rep1 (SimFixture writes both by construction)
       val fn = m.featureNames.orderBy("feature_idx").head()
       // feature_idx is LongType (ADVICE r10: Int wraps past 2^31 rows)
       assert(fn.getLong(0) == 0L && fn.getString(1) == "mmu-let-7c-2-3p")
@@ -88,7 +87,28 @@ class EtlSpec extends SparkSpec {
       assert(col2.min == 0.0 && col2.max == 1.0)
     }
 
-    it("scales the real simulation matrix into [0,1] per feature") {
+    it("fits a wide 8 x 20,531 frame to the exact per-column min/max") {
+      import spark.implicits._
+      // TCGA RNA-seq width: the fit must stay linear in the row width
+      val width = 20531
+      val rng = new java.util.SplittableRandom(11L)
+      val df = Seq.fill(8)(Array.fill(width)(rng.nextDouble() * 100 - 50))
+        .toDF("features").cache()
+      df.count()
+      val t0 = System.nanoTime()
+      val fitted = Scalers.fit(df).head()
+      info(f"fit: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      val want = df.select(posexplode(col("features")))
+        .groupBy("pos").agg(min("col"), max("col"))
+        .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2)))
+        .sortBy(_._1).map(_._2)
+      assert(want.length == width)
+      assert(fitted.getSeq[Double](0) == want.map(_._1).toSeq)
+      assert(fitted.getSeq[Double](1) == want.map(_._2).toSeq)
+      df.unpersist()
+    }
+
+    it("scales the simulation matrix into [0,1] per feature") {
       val m = OmicsReader.readTransposed(spark, simFile).data
       val scaled = Scalers.fitTransform(m)
       val agg = scaled.select(

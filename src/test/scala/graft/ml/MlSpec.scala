@@ -86,50 +86,8 @@ class MlSpec extends SparkSpec {
     }
   }
 
-  describe("DBSCAN / Birch (M3 — dormant in reference, over-delivered)") {
-    import spark.implicits._
-    // three tight 2-d blobs + one far outlier
-    val pts = Seq(
-      (0L, Seq(0.0, 0.0)), (1L, Seq(0.2, 0.1)), (2L, Seq(0.1, 0.2)),
-      (3L, Seq(10.0, 10.0)), (4L, Seq(10.2, 10.1)), (5L, Seq(10.1, 9.9)),
-      (6L, Seq(0.0, 10.0)), (7L, Seq(0.1, 10.2)), (8L, Seq(0.2, 9.9)),
-      (9L, Seq(50.0, 50.0))
-    ).toDF("vec_id", "features")
-
-    it("dbscan finds the blobs as clusters and flags the outlier as noise") {
-      val res = Dbscan.fitPredict(pts, eps = 0.5, minPts = 3)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(res(9L) == -1L, "far outlier must be noise")
-      assert(Seq(0L, 1L, 2L).map(res).distinct.size == 1)
-      assert(Seq(3L, 4L, 5L).map(res).distinct.size == 1)
-      assert(Seq(6L, 7L, 8L).map(res).distinct.size == 1)
-      assert(Seq(res(0L), res(3L), res(6L)).distinct.size == 3)
-      // deterministic numbering: clusters ordered by smallest member id
-      assert(res(0L) == 0L && res(3L) == 1L && res(6L) == 2L)
-    }
-
-    it("dbscan with sklearn-default minPts=5 marks 3-point blobs as noise") {
-      val res = Dbscan.fitPredict(pts, eps = 0.5, minPts = 5)
-        .collect().map(r => r.getLong(1))
-      assert(res.forall(_ == -1L))
-    }
-
-    it("birch recovers the blobs at n_clusters=3 and is deterministic") {
-      val clustered = pts.filter(col("vec_id") < 9)
-      val r1 = Birch.fitPredict(clustered, nClusters = 3)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(Seq(0L, 1L, 2L).map(r1).distinct.size == 1)
-      assert(Seq(3L, 4L, 5L).map(r1).distinct.size == 1)
-      assert(Seq(6L, 7L, 8L).map(r1).distinct.size == 1)
-      assert(Seq(r1(0L), r1(3L), r1(6L)).distinct.size == 3)
-      val r2 = Birch.fitPredict(clustered, nClusters = 3)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(r1 == r2)
-    }
-  }
-
   describe("SimulationNb end-to-end (SURVEY §7.3)") {
-    val file = "/root/reference/Simulation_Data/miRNA_seq_2_groups_1_diff.csv"
+    def file = graft.SimFixture.path
 
     it("runs ingest->split->scale->NB-CV and is seed-deterministic") {
       val cv1 = SimulationNb.run(spark, file).collect()

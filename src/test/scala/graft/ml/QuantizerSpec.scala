@@ -124,15 +124,6 @@ class QuantizerSpec extends SparkSpec {
       "two fits over the same data diverged — fit is not deterministic")
   }
 
-  it("scaled IVF quantizer keeps the search geometry: k = ceil(sqrt(n)) " +
-      "uncapped, two-level shape") {
-    val q = SimilarityOps.scaledIvfQuantizer(spark, "/root/testdata/sf0.001")
-    // n = 500 -> kTotal = 23 -> k1 = 5, k2 = 5
-    assert(q.k1 == 5 && q.k2 == 5 && q.k == 25)
-    assert(q.coarse.length == 5 && q.sub.length == 25)
-    assert(q.sub.forall(_.length == SimilarityOps.EmbeddingDim))
-  }
-
   it("forced over-ceiling routing: cachedSemDedupRanked takes the " +
       "scaled fit and the kept set still satisfies the pair rule") {
     val d = "/root/testdata/sf0.001" // n=500, kTotal=8

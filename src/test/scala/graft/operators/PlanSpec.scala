@@ -413,6 +413,44 @@ class PlanSpec extends SparkSpec {
     assert(scans == 1, s"$scans scans\n$p")
   }
 
+  it("a14_usage_entropy equals log k + Σ p log p of the one-hot usage matrix") {
+    val q = SparkEntry.queries("a14_usage_entropy")(spark, sf)
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    // rebuild each view's one-hot assignment matrix from the same table
+    val rows = spark.read.parquet(s"$sf/embeddings.parquet")
+      .selectExpr("vec_id % 2 AS view", "label").collect()
+      .map(r => (r.getLong(0), r.getInt(1)))
+    val labels = rows.map(_._2).distinct.sorted
+    val k = labels.length
+    for (view <- Seq(0L, 1L)) {
+      val onehot = rows.filter(_._1 == view)
+        .map(r => labels.map(l => if (r._2 == l) 1.0 else 0.0))
+      val mass = Array.tabulate(k)(c => onehot.map(_(c)).sum)
+      val p = mass.map(_ / mass.sum)
+      val expected = math.log(k) + p.map(v => v * math.log(v)).sum
+      assert(math.abs(q(view) - (math.rint(expected * 1e6) / 1e6)) < 2e-6,
+        s"view=$view query=${q(view)} local=$expected")
+    }
+  }
+
+  it("a15_cca_cov equals the local centred sample covariance of its 8 columns") {
+    val q = SparkEntry.queries("a15_cca_cov")(spark, sf)
+      .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
+    // (a1..a4, b1..b4): the first 4 dims of each embedding half
+    val raw = spark.read.parquet(s"$sf/embeddings.parquet")
+      .selectExpr((1 to 4).map(i => s"CAST(embedding[${i - 1}] AS DOUBLE)") ++
+        (1 to 4).map(j => s"CAST(embedding[${32 + j - 1}] AS DOUBLE)"): _*)
+      .collect().map(r => Array.tabulate(8)(r.getDouble))
+    val m = raw.length.toDouble
+    val means = Array.tabulate(8)(c => raw.map(_(c)).sum / m)
+    for (i <- 1 to 4; j <- 1 to 4) {
+      val (a, b) = (i - 1, 4 + j - 1)
+      val cov = raw.map(r => (r(a) - means(a)) * (r(b) - means(b))).sum / (m - 1)
+      assert(math.abs(q((i, j)) - (math.rint(cov * 1e6) / 1e6)) < 2e-6,
+        s"($i,$j) query=${q((i, j))} local=$cov")
+    }
+  }
+
   it("p6_key_filter pushes the substring predicate to the scan") {
     val p = planOf("p6_key_filter")
     assert(p.contains("StringContains(source,1)"), p)

@@ -5,9 +5,8 @@ import graft.SparkSpec
 class SimulationRunSpec extends SparkSpec {
 
   describe("SimulationRun (§3.1→§3.2→§3.3 composition)") {
-    it("selection -> retrain -> eval on real reference data") {
-      val res = SimulationRun.run(spark,
-        "/root/reference/Simulation_Data/miRNA_seq_2_groups_1_diff.csv",
+    it("selection -> retrain -> eval on the simulation fixture") {
+      val res = SimulationRun.run(spark, graft.SimFixture.path,
         (d1, d2, mult) => graft.nn.ArchZoo.jisaeO3(d1, d2, mult),
         nTrials = 2, cv = 2, epochScale = 0.01)
       assert(res.trials.count() == 2)
