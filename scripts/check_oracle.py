@@ -7,9 +7,10 @@ Reads each <verifyOutDir>/<name> parquet (written by graft.Verify), runs the
 matching oracle SQL from oracle_sql.json in DuckDB against the sfDir tables,
 and compares: schema (column names, sorted), row count, and values (rows
 sorted, columns sorted by name). Exact match required; floats reported with
-max abs diff when close-but-not-equal.
+max abs diff when close-but-not-equal. Each verdict line carries the oracle's
+DuckDB seconds; the five slowest oracles are listed before the summary line.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 
@@ -25,6 +26,9 @@ def main(sf_dir, out_dir):
     with open(os.path.join(out_dir, "oracle_sql.json")) as f:
         oracles = json.load(f)
     n_pass = n_fail = 0
+    duck_s = {}
+    def took(name):
+        return f" [duckdb {duck_s[name]:.2f}s]" if name in duck_s else ""
     for name, sql in sorted(oracles.items()):
         pdir = os.path.join(out_dir, name)
         if not os.path.isdir(pdir):
@@ -32,16 +36,18 @@ def main(sf_dir, out_dir):
         try:
             spark_df = pd.concat([pd.read_parquet(p) for p in
                                   sorted(glob.glob(f"{pdir}/*.parquet"))])
+            t0 = time.perf_counter()
             duck_df = con.sql(sql).df()
+            duck_s[name] = time.perf_counter() - t0
         except Exception as e:
             print(f"FAIL {name}: {type(e).__name__}: {e}"); n_fail += 1; continue
         s_cols, d_cols = sorted(spark_df.columns), sorted(duck_df.columns)
         if s_cols != d_cols:
-            print(f"FAIL {name}: cols spark={s_cols} duck={d_cols}"); n_fail += 1; continue
+            print(f"FAIL {name}: cols spark={s_cols} duck={d_cols}{took(name)}"); n_fail += 1; continue
         s = spark_df[s_cols].sort_values(s_cols).reset_index(drop=True)
         d = duck_df[d_cols].sort_values(d_cols).reset_index(drop=True)
         if len(s) != len(d):
-            print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}"); n_fail += 1; continue
+            print(f"FAIL {name}: rows spark={len(s)} duck={len(d)}{took(name)}"); n_fail += 1; continue
         bad = []
         for c in s_cols:
             sv, dv = s[c], d[c]
@@ -56,9 +62,12 @@ def main(sf_dir, out_dir):
                     ex = svs[svs != dvs].index[0]
                     bad.append(f"{c} (e.g. row {ex}: {sv[ex]!r} vs {dv[ex]!r})")
         if bad:
-            print(f"FAIL {name}: value mismatch in {bad}"); n_fail += 1
+            print(f"FAIL {name}: value mismatch in {bad}{took(name)}"); n_fail += 1
         else:
-            print(f"PASS {name} ({len(s)} rows)"); n_pass += 1
+            print(f"PASS {name} ({len(s)} rows){took(name)}"); n_pass += 1
+    print("\nslowest DuckDB oracles:")
+    for name, secs in sorted(duck_s.items(), key=lambda kv: -kv[1])[:5]:
+        print(f"  {secs:8.2f}s  {name}")
     print(f"\n{n_pass} pass, {n_fail} fail, "
           f"{len(oracles)} oracles total")
     return 1 if n_fail else 0

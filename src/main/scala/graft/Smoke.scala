@@ -20,49 +20,36 @@ object Smoke {
     rows.take(5).foreach(r => println(s"[smoke] $r"))
     require(rows.nonEmpty, "entry returned 0 rows")
 
-    // ETL pipeline drive (SURVEY §7.3 minimum slice, data-prep half):
-    // reference TSV → transpose → labels → stratified split → min-max.
-    val sim = sys.env.getOrElse("SPARK_GRAFT_SIM_FILE",
-      "/root/reference/Simulation_Data/miRNA_seq_2_groups_0.2_diff.csv")
-    if (new java.io.File(sim).exists()) {
-      import graft.etl._
-      import org.apache.spark.sql.functions._
-      val m = OmicsReader.readTransposed(spark, sim)
-      val labeled = LabelCodec.withDerivedLabel(m.data,
-        LabelCodec.simulationLabelMap)
-      val split = Splits.stratifiedFlag(labeled, "label", "sample_id", 0.8, 42)
-      val train = Scalers.fitTransform(split.filter(col("is_train")))
-      val summary = train.groupBy("label").agg(
-        count(lit(1)).as("n_train"),
-        round(avg(aggregate(col("features"), lit(0.0), _ + _)
-          / size(col("features"))), 6).as("mean_scaled"))
-        .orderBy("label").collect()
-      summary.foreach(r => println(s"[smoke] etl $r"))
-      require(summary.map(_.getLong(1)).sum == 480, "expected 480 train rows")
+    // Simulation pipeline drive (SURVEY §3.1 + §3.3, reduced): prepare →
+    // raw-concat NB 5-fold CV (§7.3) → the comparison table for CNC_AE
+    // and JISAE-O3. Needs a simulation-layout file.
+    val sim = sys.env.get("SPARK_GRAFT_SIM_FILE")
+    sim match {
+      case None =>
+        println("[smoke] simulation and t-SNE drives skipped: " +
+          "SPARK_GRAFT_SIM_FILE is not set")
+      case Some(file) =>
+        import graft.pipeline.SimulationRun
+        val prep = SimulationRun.prepare(spark, file)
+        val perLabel = prep.paired.groupBy("label").count()
+          .orderBy("label").collect()
+        perLabel.foreach(r => println(s"[smoke] etl $r"))
+        require(perLabel.map(_.getLong(1)).sum == 480,
+          "expected 480 train rows")
 
-      // Full SURVEY §7.3 slice: ingest → split → scale → NB 5-fold CV.
-      val cv = graft.pipeline.SimulationNb.run(spark, sim).collect()
-      cv.foreach(r => println(s"[smoke] nb_cv fold=${r.getInt(0)} acc=${r.getDouble(1)}"))
-      require(cv.length == 5 && cv.forall(r => r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
+        val cv = graft.ml.GaussianNB.crossValidate(
+          SimulationRun.rawFeatures(prep).toMap.apply("raw_concat"),
+          k = 5, seed = 2023).collect()
+        cv.foreach(r => println(s"[smoke] nb_cv fold=${r.getInt(0)} acc=${r.getDouble(1)}"))
+        require(cv.length == 5 && cv.forall(r => r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
 
-      // AE slice (SURVEY §3.1+§3.3 reduced): train a small CNC-style AE,
-      // extract embeddings + per-subject recon loss, NB CV on embeddings.
-      val aeRes = graft.pipeline.SimulationAe.run(spark, sim, epochs = 3)
-      println(s"[smoke] ae epoch losses: ${aeRes.epochLosses.map(l => f"$l%.4f").mkString(", ")}")
-      val reconStats = aeRes.trainRecon.agg(avg("recon_loss"), stddev_pop("recon_loss")).head()
-      println(f"[smoke] ae recon mean=${reconStats.getDouble(0)}%.4f std=${reconStats.getDouble(1)}%.4f")
-      aeRes.nbCv.collect().foreach(r =>
-        println(s"[smoke] ae nb_cv fold=${r.getInt(0)} acc=${r.getDouble(1)}"))
-      require(aeRes.epochLosses.last < aeRes.epochLosses.head,
-        "AE loss did not decrease")
-
-      // Graph-engine drive: JISAE-O3 (3-branch + ortho loss) at real dims.
-      val gRes = graft.pipeline.SimulationAe.runArch(spark, sim,
-        (d1, d2) => graft.nn.ArchZoo.jisaeO3(d1, d2, orthoMultiplier = 0.1))
-      println(s"[smoke] jisaeO3 epoch losses: ${gRes.epochLosses.map(l => f"$l%.4f").mkString(", ")}")
-      gRes.nbCv.collect().foreach(r =>
-        println(s"[smoke] jisaeO3 nb_cv fold=${r.getInt(0)} acc=${r.getDouble(1)}"))
-      require(gRes.epochLosses.forall(l => !l.isNaN && !l.isInfinite))
+        val table = SimulationRun.compare(prep, Seq(
+          graft.nn.ArchZoo.cnc(prep.splitAt, prep.d2),
+          graft.nn.ArchZoo.jisaeO3(prep.splitAt, prep.d2, 0.1))).collect()
+        table.foreach(r => println(s"[smoke] compare $r"))
+        prep.paired.unpersist()
+        require(table.drop(3).forall(r => java.lang.Double.isFinite(r.getDouble(1))),
+          "non-finite recon loss")
     }
 
     // TCGA-shaped pipeline (FIXTURES §1.2 synthetic fixture, S2/S3
@@ -94,15 +81,13 @@ object Smoke {
     tcga.nbTable.collect().foreach(r => println(s"[smoke] tcga nb $r"))
     require(tcga.trainCount == 48 && tcga.testCount == 12)
 
-    // Optional t-SNE drive (M12): 2-D projection of AE embeddings —
+    // Optional t-SNE drive (M12): 2-D projection of the scaled matrix —
     // the tsn_visulization.py analog. Driver-local O(n²); env-gated to
     // keep the default smoke fast.
-    if (sys.env.get("SPARK_GRAFT_SMOKE_TSNE").contains("1")) {
+    for (file <- sim if sys.env.get("SPARK_GRAFT_SMOKE_TSNE").contains("1")) {
       import graft.etl._
       import org.apache.spark.sql.functions._
-      val m = OmicsReader.readTransposed(spark,
-        sys.env.getOrElse("SPARK_GRAFT_SIM_FILE",
-          "/root/reference/Simulation_Data/miRNA_seq_2_groups_1_diff.csv"))
+      val m = OmicsReader.readTransposed(spark, file)
       val labeled = LabelCodec.withDerivedLabel(m.data,
         LabelCodec.simulationLabelMap)
       val scaled = Scalers.fitTransform(labeled)

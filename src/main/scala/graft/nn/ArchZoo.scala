@@ -23,18 +23,24 @@ object ArchZoo {
   private def B(dims: Seq[Int], drops: Seq[Double], sig: Boolean = false) =
     Mlp.blocks(dims, drops, sigmoidOut = sig)
 
-  /** CNC_AE (model_structures.py:37-200). */
-  def cnc(d1: Int, d2: Int): Arch = {
+  /** Two-view concat AE: z12 = trunk(x1 ‖ x2); s1hat = dec1(z12);
+    * s2hat = dec2(z12); recon-only loss. The view widths are the
+    * stacks' own (trunk input d1 + d2, decoder outputs d1 and d2). */
+  def concatAe(trunk: Mlp, dec1: Mlp, dec2: Mlp): Arch = {
     val g = AeGraph(Vector(
       GView(0), GView(1), GConcat(Vector(0, 1)),
-      GStack(2, B(Seq(d1 + d2, 256, 128, 1024, 32), Seq(0.1, 0.4, 0.4, 0.1))),
-      GStack(3, B(Seq(32, 256, 256, 512, d1), Seq(0.1, 0.1, 0.2, 0.0), sig = true)),
-      GStack(3, B(Seq(32, 32, 256, 512, d2), Seq(0.6, 0.6, 0.2, 0.1), sig = true))),
+      GStack(2, trunk), GStack(3, dec1), GStack(3, dec2)),
       Map("z12" -> 3, "s1hat" -> 4, "s2hat" -> 5))
     Arch("CNC_AE", GraphModel(g,
       Vector(ReconTerm("s1hat", 0), ReconTerm("s2hat", 1))),
       ConcatEmbed(Seq("z12")))
   }
+
+  /** CNC_AE (model_structures.py:37-200). */
+  def cnc(d1: Int, d2: Int): Arch = concatAe(
+    trunk = B(Seq(d1 + d2, 256, 128, 1024, 32), Seq(0.1, 0.4, 0.4, 0.1)),
+    dec1 = B(Seq(32, 256, 256, 512, d1), Seq(0.1, 0.1, 0.2, 0.0), sig = true),
+    dec2 = B(Seq(32, 32, 256, 512, d2), Seq(0.6, 0.6, 0.2, 0.1), sig = true))
 
   /** X_AE (model_structures.py:206-355): per-view stems, then joint. */
   def xae(d1: Int, d2: Int): Arch = {

@@ -17,11 +17,6 @@ object Inference {
 
   private val BlockSize = 256
 
-  def embedAndRecon(df: DataFrame, ae: TwoViewAe, params: Array[Double],
-      stats: Array[Double]): DataFrame =
-    embedAndRecon(df, Trainer.TwoViewModel(ae), params, stats,
-      ConcatEmbed(Seq("z12")))
-
   /** Adds `embedding: Array[Double]` and `recon_loss: Double` columns. */
   def embedAndRecon(df: DataFrame, model: AeModel, params: Array[Double],
       stats: Array[Double], embed: EmbedSpec,
@@ -33,9 +28,6 @@ object Inference {
     val outSchema = StructType(df.schema.fields ++ Seq(
       StructField("embedding", ArrayType(DoubleType)),
       StructField("recon_loss", DoubleType)))
-    val reconKeys = Seq("s1hat" -> 0, "s2hat" -> 1,
-      "shared1_rec" -> 0, "specific1_rec" -> 0,
-      "shared2_rec" -> 1, "specific2_rec" -> 1)
     val rdd = df.rdd.mapPartitions { it =>
       val (p, s) = bc.value
       it.grouped(BlockSize).flatMap { block =>
@@ -58,7 +50,7 @@ object Inference {
         }
         // per-row recon loss: Σ over present recon outputs of
         // ‖rownorm(out)_r − rownorm(target)_r‖₂
-        val normPairs = reconKeys.collect {
+        val normPairs = ReconTerm.Outputs.collect {
           case (k, v) if outs.contains(k) =>
             (Kernel.rowNormalize(outs(k))._1,
              Kernel.rowNormalize(if (v == 0) x1 else x2)._1)

@@ -21,34 +21,6 @@ object Kernel {
   val BnMomentum = 0.1
   val NormEps = 1e-12
 
-  // ---- parameter init ---------------------------------------------------
-
-  /** Fresh (params, bnStats) for a TwoViewAe, torch-style init, seeded. */
-  def init(ae: TwoViewAe, seed: Long): (Array[Double], Array[Double]) = {
-    val rng = new java.util.Random(seed)
-    val params = new Array[Double](ae.paramCount)
-    val stats = new Array[Double](ae.statCount)
-    var p = 0; var s = 0
-    for (mlp <- Seq(ae.trunk, ae.dec1, ae.dec2); l <- mlp.layers) l match {
-      case LinearSpec(in, out) =>
-        val bound = 1.0 / math.sqrt(in)
-        var i = 0
-        while (i < in * out + out) {
-          params(p + i) = (rng.nextDouble() * 2 - 1) * bound
-          i += 1
-        }
-        p += in * out + out
-      case BatchNormSpec(dim) =>
-        java.util.Arrays.fill(params, p, p + dim, 1.0)      // gamma = 1
-        java.util.Arrays.fill(params, p + dim, p + 2 * dim, 0.0) // beta = 0
-        java.util.Arrays.fill(stats, s, s + dim, 0.0)       // run mean = 0
-        java.util.Arrays.fill(stats, s + dim, s + 2 * dim, 1.0) // run var = 1
-        p += 2 * dim; s += 2 * dim
-      case _ =>
-    }
-    (params, stats)
-  }
-
   // ---- one MLP stack ----------------------------------------------------
 
   /** Stateful per-batch runner for one stack. Offsets locate this stack's
@@ -282,56 +254,8 @@ object Kernel {
     (loss, grad)
   }
 
-  // ---- Two-view AE batch step ------------------------------------------
-
+  /** One batch's loss, flat gradient (params layout), BN batch stats
+    * (for the driver's running update) and row count. */
   final case class BatchResult(loss: Double, grads: Array[Double],
       batchStats: Array[Double], n: Int)
-
-  /** Forward+backward of one batch: returns CustomLoss, full flat
-    * gradient, and BN batch stats (for the driver's running update). */
-  def batchGradient(ae: TwoViewAe, params: Array[Double],
-      stats: Array[Double], x1: DenseMatrix[Double],
-      x2: DenseMatrix[Double], dropoutRng: java.util.Random): BatchResult = {
-    val grads = new Array[Double](ae.paramCount)
-    val trunkR = new MlpRunner(ae.trunk, params, 0, stats, 0, true, dropoutRng)
-    val d1R = new MlpRunner(ae.dec1, params, ae.trunk.paramCount,
-      stats, ae.trunk.statCount, true, dropoutRng)
-    val d2R = new MlpRunner(ae.dec2, params,
-      ae.trunk.paramCount + ae.dec1.paramCount,
-      stats, ae.trunk.statCount + ae.dec1.statCount, true, dropoutRng)
-
-    val x12 = DenseMatrix.horzcat(x1, x2)
-    val z = trunkR.forward(x12)
-    val s1hat = d1R.forward(z)
-    val s2hat = d2R.forward(z)
-    val (l1, g1) = frobeniusNormalizedLoss(s1hat, x1)
-    val (l2, g2) = frobeniusNormalizedLoss(s2hat, x2)
-    val dz = d1R.backward(g1, grads) + d2R.backward(g2, grads)
-    trunkR.backward(dz, grads)
-
-    val bs = new Array[Double](ae.statCount)
-    System.arraycopy(trunkR.batchStats, 0, bs, 0, ae.trunk.statCount)
-    System.arraycopy(d1R.batchStats, 0, bs, ae.trunk.statCount,
-      ae.dec1.statCount)
-    System.arraycopy(d2R.batchStats, 0, bs,
-      ae.trunk.statCount + ae.dec1.statCount, ae.dec2.statCount)
-    BatchResult(l1 + l2, grads, bs, x1.rows)
-  }
-
-  /** Eval-mode forward: (z, s1hat, s2hat) using running BN stats, no
-    * dropout (M14 inference). */
-  def evalForward(ae: TwoViewAe, params: Array[Double],
-      stats: Array[Double], x1: DenseMatrix[Double],
-      x2: DenseMatrix[Double])
-      : (DenseMatrix[Double], DenseMatrix[Double], DenseMatrix[Double]) = {
-    val rng = new java.util.Random(0) // unused in eval
-    val trunkR = new MlpRunner(ae.trunk, params, 0, stats, 0, false, rng)
-    val d1R = new MlpRunner(ae.dec1, params, ae.trunk.paramCount,
-      stats, ae.trunk.statCount, false, rng)
-    val d2R = new MlpRunner(ae.dec2, params,
-      ae.trunk.paramCount + ae.dec1.paramCount,
-      stats, ae.trunk.statCount + ae.dec1.statCount, false, rng)
-    val z = trunkR.forward(DenseMatrix.horzcat(x1, x2))
-    (z, d1R.forward(z), d2R.forward(z))
-  }
 }

@@ -78,6 +78,16 @@ final case class ReconTerm(out: String, view: Int, weight: Double = 1.0,
   }
 }
 
+object ReconTerm {
+  /** Every recon output a two-view model can name, with its target view:
+    * the plain AEs' s1hat/s2hat and MOCSS's four reconstructions. Eval
+    * loss and per-subject recon sum over the ones a model has, in this
+    * order. */
+  val Outputs: Seq[(String, Int)] = Seq("s1hat" -> 0, "s2hat" -> 1,
+    "shared1_rec" -> 0, "specific1_rec" -> 0,
+    "shared2_rec" -> 1, "specific2_rec" -> 1)
+}
+
 /** O1 ortho: weight · mean(rownorm(a) ⊙ rownorm(b))
   * (JISAE-O1_selection.py:266-293; model_structures.py:1466-1474).
   * `center` subtracts each matrix's global mean before normalizing

@@ -48,40 +48,3 @@ object Mlp {
     Mlp(if (sigmoidOut) ls :+ SigmoidSpec else ls)
   }
 }
-
-/** Two-view concat autoencoder (CNC_AE — model_structures.py:185-200):
-  * z = trunk(concat(s1, s2)); s1hat = dec1(z); s2hat = dec2(z).
-  */
-final case class TwoViewAe(d1: Int, d2: Int, trunk: Mlp, dec1: Mlp, dec2: Mlp)
-    extends Serializable {
-  def paramCount: Int = trunk.paramCount + dec1.paramCount + dec2.paramCount
-  def statCount: Int = trunk.statCount + dec1.statCount + dec2.statCount
-}
-
-object TwoViewAe {
-  /** CNC_AE at the reference's published dims
-    * (model_structures.py:44-56 encoder 256/128/1024/32;
-    * :113-122 decoder-s1 256/256/512/d1, decoder-s2 32/256/512/d2;
-    * drop rates from the nn.Dropout declarations). */
-  def cnc(d1: Int, d2: Int, embed: Int = 32): TwoViewAe = TwoViewAe(
-    d1, d2,
-    trunk = Mlp.blocks(Seq(d1 + d2, 256, 128, 1024, embed),
-      Seq(0.1, 0.4, 0.4, 0.1)),
-    dec1 = Mlp.blocks(Seq(embed, 256, 256, 512, d1),
-      Seq(0.1, 0.1, 0.2, 0.0), sigmoidOut = true),
-    dec2 = Mlp.blocks(Seq(embed, 32, 256, 512, d2),
-      Seq(0.6, 0.6, 0.2, 0.1), sigmoidOut = true))
-
-  /** Small configurable CNC-style net for tests / search. */
-  def cncSized(d1: Int, d2: Int, hidden: Seq[Int], embed: Int,
-      drop: Double = 0.0): TwoViewAe = {
-    val encDims = (d1 + d2) +: hidden :+ embed
-    val decHidden = hidden.reverse
-    TwoViewAe(d1, d2,
-      trunk = Mlp.blocks(encDims, Seq.fill(encDims.length - 1)(drop)),
-      dec1 = Mlp.blocks(embed +: decHidden :+ d1,
-        Seq.fill(decHidden.length + 1)(drop), sigmoidOut = true),
-      dec2 = Mlp.blocks(embed +: decHidden :+ d2,
-        Seq.fill(decHidden.length + 1)(drop), sigmoidOut = true))
-  }
-}

@@ -27,24 +27,6 @@ object Trainer {
   final case class Trained(model: AeModel, params: Array[Double],
       stats: Array[Double], epochLosses: Seq[Double])
 
-  /** Adapter exposing the direct CNC-shaped kernel as an [[AeModel]]. */
-  final case class TwoViewModel(ae: TwoViewAe) extends AeModel {
-    def paramCount: Int = ae.paramCount
-    def statCount: Int = ae.statCount
-    def initParams(seed: Long): (Array[Double], Array[Double]) =
-      Kernel.init(ae, seed)
-    def batchGradient(params: Array[Double], stats: Array[Double],
-        x1: DenseMatrix[Double], x2: DenseMatrix[Double],
-        rng: java.util.Random): Kernel.BatchResult =
-      Kernel.batchGradient(ae, params, stats, x1, x2, rng)
-    def evalOutputs(params: Array[Double], stats: Array[Double],
-        x1: DenseMatrix[Double], x2: DenseMatrix[Double])
-        : Map[String, DenseMatrix[Double]] = {
-      val (z, s1hat, s2hat) = Kernel.evalForward(ae, params, stats, x1, x2)
-      Map("z12" -> z, "s1hat" -> s1hat, "s2hat" -> s2hat)
-    }
-  }
-
   private final class IdPartitioner(n: Int) extends Partitioner {
     def numPartitions: Int = n
     def getPartition(key: Any): Int = key.asInstanceOf[Int]
@@ -60,13 +42,6 @@ object Trainer {
     }
     m
   }
-
-  /** Train on (x1, x2) array columns (CNC-shaped direct kernel). */
-  def train(df: DataFrame, ae: TwoViewAe, cfg: Config,
-      x1Col: String, x2Col: String): Trained =
-    train(df, TwoViewModel(ae), cfg, x1Col, x2Col)
-  def train(df: DataFrame, ae: TwoViewAe, cfg: Config): Trained =
-    train(df, TwoViewModel(ae), cfg, "x1", "x2")
 
   /** Train any [[AeModel]] on (x1, x2) array columns. */
   def train(df: DataFrame, model: AeModel, cfg: Config,
@@ -139,16 +114,6 @@ object Trainer {
     Trained(model, params, stats, losses.toSeq)
   }
 
-  /** Cluster-scale synchronous variant: ONE gradient step per epoch,
-    * each partition acting as a local batch (torch DataParallel
-    * semantics: per-replica BatchNorm statistics, per-replica batch-
-    * local loss terms), gradients SUMMED across partitions with
-    * treeAggregate, single Adam step + BN running update on the driver.
-    * This is the 100 TB path: weights ship once per epoch, the gradient
-    * reduction is O(log partitions), and no epoch-wise reshuffle is
-    * required. Exact mini-batch parity is what [[train]] provides; this
-    * trades batch-order semantics for cluster throughput.
-    */
   /** Default per-slice byte bound for the chunked gradient reduction:
     * 64 MiB of doubles. SURVEY §4.4 risk register: the hyperparameter
     * search maximum is a ~45 M-param model, so a monolithic gradient is
@@ -165,7 +130,17 @@ object Trainer {
       maxSliceBytes: Long = DefaultGradSliceBytes): Int =
     math.max(1L, (paramCount * 8 + maxSliceBytes - 1) / maxSliceBytes).toInt
 
-  /** `gradChunks > 1` bounds the reduction/driver peak to
+  /** Cluster-scale synchronous variant: ONE gradient step per epoch,
+    * each partition acting as a local batch (torch DataParallel
+    * semantics: per-replica BatchNorm statistics, per-replica batch-
+    * local loss terms), gradients SUMMED across partitions with
+    * treeAggregate, single Adam step + BN running update on the driver.
+    * This is the 100 TB path: weights ship once per epoch, the gradient
+    * reduction is O(log partitions), and no epoch-wise reshuffle is
+    * required. Exact mini-batch parity is what [[train]] provides; this
+    * trades batch-order semantics for cluster throughput.
+    *
+    * `gradChunks > 1` bounds the reduction/driver peak to
     * paramCount/gradChunks doubles: per-partition gradients are cached
     * once per epoch, then reduced slice by slice (the SURVEY §4.4
     * per-layer-aggregation mitigation for 45 M-param search maxima —
@@ -268,19 +243,12 @@ object Trainer {
   /** Eval-mode CustomLoss over a full dataset, computed distributed:
     * ‖·‖_F decomposes into per-partition sums of squares
     * (reference evaluates the val fold as one full batch —
-    * reconloss_from_retrained_models.py:19). */
-  def evaluateLoss(df: DataFrame, ae: TwoViewAe, params: Array[Double],
-      stats: Array[Double]): Double =
-    evaluateLoss(df, TwoViewModel(ae), params, stats, "x1", "x2")
-
+    * reconloss_from_retrained_models.py:19). The partials come back in
+    * partition order and merge on the driver, so the float sums do not
+    * depend on which task finishes first. */
   def evaluateLoss(df: DataFrame, model: AeModel, params: Array[Double],
       stats: Array[Double], x1Col: String = "x1",
       x2Col: String = "x2"): Double = {
-    // recon outputs and their target view, covering both the plain AEs
-    // (s1hat/s2hat) and MOCSS's four reconstructions
-    val reconKeys = Seq("s1hat" -> 0, "s2hat" -> 1,
-      "shared1_rec" -> 0, "specific1_rec" -> 0,
-      "shared2_rec" -> 1, "specific2_rec" -> 1)
     val partials = df.select(x1Col, x2Col).rdd
       .map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray))
       .mapPartitions { it =>
@@ -304,16 +272,18 @@ object Trainer {
             }
             acc
           }
-          Iterator(reconKeys.collect {
+          // one sum of squares per recon output the model has, in
+          // ReconTerm.Outputs order (the same for every partition)
+          Iterator(ReconTerm.Outputs.collect {
             case (k, v) if outs.contains(k) =>
-              k -> ssOf(outs(k), if (v == 0) x1 else x2)
-          }.toMap)
+              ssOf(outs(k), if (v == 0) x1 else x2)
+          }.toArray)
         }
       }
-      .fold(Map.empty[String, Double]) { (a, b) =>
-        (a.keySet ++ b.keySet).map(k =>
-          k -> (a.getOrElse(k, 0.0) + b.getOrElse(k, 0.0))).toMap
-      }
-    partials.values.map(math.sqrt).sum
+      .collect()
+    if (partials.isEmpty) 0.0
+    else partials.head.indices.foldLeft(0.0) { (acc, j) =>
+      acc + math.sqrt(partials.foldLeft(0.0)(_ + _(j)))
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.{LabelCodec, OmicsReader, Scalers, Splits}
 import graft.ml.GaussianNB
@@ -11,7 +11,9 @@ import graft.search.{RandomSearch, Retrain}
   * model selection (random search + median pruning over the published
   * space, k-fold CV per trial) → retraining with the best trial on the
   * full training split → evaluation (per-subject recon loss, embedding
-  * extraction, NB CV) → S7/S8-shaped trial tables.
+  * extraction, NB CV) → S7/S8-shaped trial tables. [[compare]] builds
+  * the cross-architecture table from the same preparation and
+  * evaluation.
   *
   * `trialBudget`/`epochScale` shrink the search for CI-scale runs; the
   * composition and semantics are the reference's
@@ -55,40 +57,96 @@ object SimulationRun {
     Prepared(paired, flagged, width, splitAt)
   }
 
-  /** §3.2 retrain with the given hypers + §3.3 evaluation (per-subject
-    * recon, embedding NB CV, held-out test recon). */
+  /** §3.3 scores of one trained model; see [[evaluate]]. The held-out
+    * test recon runs on first use: [[compare]] never reads it. */
+  final class Scores(val reconStats: (Double, Double), val nbCv: DataFrame,
+      testRecon: () => (Double, Double)) {
+    lazy val testReconStats: (Double, Double) = testRecon()
+  }
+
+  /** The raw-feature NB inputs (AE_results.ipynb cell 124's Gene, miRNA
+    * and Gene+miRNA rows) as (name, frame of sample_id, label_idx,
+    * features). `raw_concat` is the scaled train matrix itself. */
+  def rawFeatures(prep: Prepared): Seq[(String, DataFrame)] = {
+    def rows(features: Column) = prep.paired.select(col("sample_id"),
+      col("label_idx"), features.as("features"))
+    Seq("raw_x1" -> rows(col("x1")), "raw_x2" -> rows(col("x2")),
+      "raw_concat" -> rows(concat(col("x1"), col("x2"))))
+  }
+
+  /** §3.3 evaluation of trained weights: per-subject recon mean/std on
+    * the train split, NB 5-fold CV on the extracted embeddings, and
+    * (on first use) recon mean/std on the held-out test split. */
+  def evaluate(prep: Prepared, arch: ArchZoo.Arch, params: Array[Double],
+      stats: Array[Double]): Scores = {
+    val inferred = Inference.embedAndRecon(prep.paired, arch.model,
+      params, stats, arch.embed).cache()
+    val st = inferred.agg(avg("recon_loss"), stddev_pop("recon_loss"))
+      .head()
+    val nb = GaussianNB.crossValidate(
+      inferred.select(col("sample_id"), col("label_idx"),
+        col("embedding").as("features")), k = 5, seed = 2023)
+    inferred.unpersist()
+    new Scores((st.getDouble(0), st.getDouble(1)), nb, () => {
+      // held-out 20%: the trained model applied to the test split
+      // (reconloss_from_retrained_models.py:61-83; the published test
+      // aggregate is AE_results.ipynb cell 30). The scaler REFITS on the
+      // split it transforms — the reference's cell-81 quirk that
+      // Scalers.fitTransform reproduces for both splits.
+      val scaledTest = Scalers
+        .fitTransform(prep.flagged.filter(!col("is_train")))
+      val pairedTest = scaledTest.select(
+        col("sample_id"), col("label"), col("label_idx"),
+        slice(col("features"), 1, prep.splitAt).as("x1"),
+        slice(col("features"), prep.splitAt + 1, prep.d2).as("x2"))
+      val tst = Inference
+        .embedAndRecon(pairedTest, arch.model, params, stats, arch.embed)
+        .agg(avg("recon_loss"), stddev_pop("recon_loss")).head()
+      (tst.getDouble(0), tst.getDouble(1))
+    })
+  }
+
+  /** §3.2 retrain with the given hypers + §3.3 [[evaluate]]. */
   def evalBest(prep: Prepared, mkArch: (Int, Int, Double) => ArchZoo.Arch,
       best: RandomSearch.Hypers, epochScale: Double,
       modelDir: Option[String] = None): EvalResult = {
     val arch = mkArch(prep.splitAt, prep.d2, best.orthoMultiplier)
     val retrained = Retrain.run(prep.paired, _ => arch.model,
       best, epochScale = epochScale, savePath = modelDir)
+    val s = evaluate(prep, arch, retrained.params, retrained.stats)
+    EvalResult(retrained.epochLosses, s.reconStats, s.nbCv,
+      s.testReconStats)
+  }
 
-    val inferred = Inference.embedAndRecon(prep.paired, arch.model,
-      retrained.params, retrained.stats, arch.embed).cache()
-    val stats = inferred.agg(avg("recon_loss"), stddev_pop("recon_loss"))
-      .head()
-    val nb = GaussianNB.crossValidate(
-      inferred.select(col("sample_id"), col("label_idx"),
-        col("embedding").as("features")), k = 5, seed = 2023)
-    // held-out 20%: the retrained model applied to the test split
-    // (reconloss_from_retrained_models.py:61-83; the published test
-    // aggregate is AE_results.ipynb cell 30). The scaler REFITS on the
-    // split it transforms — the reference's cell-81 quirk that
-    // Scalers.fitTransform reproduces for both splits.
-    val scaledTest = Scalers
-      .fitTransform(prep.flagged.filter(!col("is_train")))
-    val pairedTest = scaledTest.select(
-      col("sample_id"), col("label"), col("label_idx"),
-      slice(col("features"), 1, prep.splitAt).as("x1"),
-      slice(col("features"), prep.splitAt + 1, prep.d2).as("x2"))
-    val tstats = Inference
-      .embedAndRecon(pairedTest, arch.model, retrained.params,
-        retrained.stats, arch.embed)
-      .agg(avg("recon_loss"), stddev_pop("recon_loss")).head()
-    EvalResult(retrained.epochLosses,
-      (stats.getDouble(0), stats.getDouble(1)), nb,
-      (tstats.getDouble(0), tstats.getDouble(1)))
+  /** The AE_results comparison table (cells 78-79 recon, 121/124 NB):
+    * the three [[rawFeatures]] baselines, then each arch trained for
+    * `epochs` on the prepared train split (lr 1e-3, batch 128). Columns
+    * model, recon_mean, recon_std (NaN for the raw rows) and nb_acc
+    * (mean of the 5 NB folds), rounded to 4 places. */
+  def compare(prep: Prepared, archs: Seq[ArchZoo.Arch],
+      epochs: Int = 2): DataFrame = {
+    def meanAcc(cv: DataFrame): Double = {
+      val accs = cv.collect().map(_.getDouble(1))
+      accs.sum / accs.length
+    }
+    val rawRows = rawFeatures(prep).map { case (name, df) =>
+      (name, Double.NaN, Double.NaN,
+        meanAcc(GaussianNB.crossValidate(df, k = 5, seed = 2023)))
+    }
+    val archRows = archs.map { arch =>
+      val t = Trainer.train(prep.paired, arch.model,
+        Trainer.Config(lr = 1e-3, weightDecay = 1e-6, batchSize = 128,
+          epochs = epochs, seed = 21))
+      val s = evaluate(prep, arch, t.params, t.stats)
+      (arch.name, s.reconStats._1, s.reconStats._2, meanAcc(s.nbCv))
+    }
+    val spark = prep.paired.sparkSession
+    import spark.implicits._
+    (rawRows ++ archRows)
+      .toDF("model", "recon_mean", "recon_std", "nb_acc")
+      .select(col("model"), round(col("recon_mean"), 4).as("recon_mean"),
+        round(col("recon_std"), 4).as("recon_std"),
+        round(col("nb_acc"), 4).as("nb_acc"))
   }
 
   def run(spark: SparkSession, path: String,

@@ -36,9 +36,10 @@ class EtlSpec extends SparkSpec {
   }
 
   describe("Splits (SP1/SP2/SP3)") {
+    // cached: every action below would otherwise redo the read+transpose
     lazy val df = LabelCodec.withDerivedLabel(
       OmicsReader.readTransposed(spark, simFile).data,
-      LabelCodec.simulationLabelMap)
+      LabelCodec.simulationLabelMap).cache()
 
     it("stratified 80/20 split has exact per-class counts and is a partition") {
       val s = Splits.stratifiedFlag(df, "label", "sample_id", 0.8, 42)

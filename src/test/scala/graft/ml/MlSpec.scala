@@ -2,7 +2,7 @@ package graft.ml
 
 import graft.SparkSpec
 import graft.metrics.{ClusteringMetrics, Hungarian}
-import graft.pipeline.SimulationNb
+import graft.pipeline.SimulationRun
 import org.apache.spark.sql.functions._
 
 class MlSpec extends SparkSpec {
@@ -86,14 +86,21 @@ class MlSpec extends SparkSpec {
     }
   }
 
-  describe("SimulationNb end-to-end (SURVEY §7.3)") {
-    def file = graft.SimFixture.path
+  describe("Raw-feature NB end-to-end (SURVEY §7.3)") {
+    /** prepare (ingest -> label -> split -> scale) then NB 5-fold CV on
+      * the raw concat view, as (fold, accuracy) by fold. */
+    def rawConcatCv(): Array[(Int, Double)] = {
+      val prep = SimulationRun.prepare(spark, graft.SimFixture.path)
+      try GaussianNB.crossValidate(
+          SimulationRun.rawFeatures(prep).toMap.apply("raw_concat"),
+          k = 5, seed = 2023).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1)
+      finally prep.paired.unpersist()
+    }
 
     it("runs ingest->split->scale->NB-CV and is seed-deterministic") {
-      val cv1 = SimulationNb.run(spark, file).collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1)
-      val cv2 = SimulationNb.run(spark, file).collect()
-        .map(r => r.getInt(0) -> r.getDouble(1)).sortBy(_._1)
+      val cv1 = rawConcatCv()
+      val cv2 = rawConcatCv()
       assert(cv1.length == 5)
       assert(cv1.sameElements(cv2))
       // 2 groups at max differential expression: NB on raw features

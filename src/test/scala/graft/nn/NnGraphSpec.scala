@@ -167,10 +167,10 @@ class NnGraphSpec extends SparkSpec {
     }
 
     it("trainSync (treeAggregate path) converges and is deterministic") {
-      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
       val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
         batchSize = 0 /* unused in sync mode */, epochs = 14, seed = 21)
-      val t1 = Trainer.trainSync(data, Trainer.TwoViewModel(ae), cfg)
+      val t1 = Trainer.trainSync(data, model, cfg)
       val first3 = t1.epochLosses.take(3).sum / 3
       val last3 = t1.epochLosses.takeRight(3).sum / 3
       assert(last3 < first3,
@@ -180,16 +180,16 @@ class NnGraphSpec extends SparkSpec {
       // seeds); later epochs drift at FP level because treeReduce's
       // gradient-summation order varies — inherent to synchronous
       // data-parallel reduction (same as Spark ML's treeAggregate).
-      val t2 = Trainer.trainSync(data, Trainer.TwoViewModel(ae), cfg)
+      val t2 = Trainer.trainSync(data, model, cfg)
       assert(math.abs(t1.epochLosses.head - t2.epochLosses.head) < 1e-12)
     }
 
     it("chunked gradient reduction matches the unchunked first epoch") {
-      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
       val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
         batchSize = 0, epochs = 6, seed = 21)
-      val whole = Trainer.trainSync(data, Trainer.TwoViewModel(ae), cfg)
-      val chunked = Trainer.trainSync(data, Trainer.TwoViewModel(ae), cfg,
+      val whole = Trainer.trainSync(data, model, cfg)
+      val chunked = Trainer.trainSync(data, model, cfg,
         gradChunks = 7)
       // forward pass from identical init → identical first-epoch loss;
       // later epochs drift at FP level (reduction order)
@@ -226,10 +226,9 @@ class NnGraphSpec extends SparkSpec {
       // a genuinely-wide layer driven through the AUTO path: a tiny
       // slice budget forces many sequential slice reductions, and the
       // result still matches the whole-gradient first epoch exactly
-      val wide = TwoViewAe.cncSized(6, 4, hidden = Seq(64), embed = 3)
       val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
         batchSize = 0, epochs = 2, seed = 21)
-      val model = Trainer.TwoViewModel(wide)
+      val model = TestNets.cncSized(6, 4, hidden = Seq(64), embed = 3).model
       val budget = 1024L // bytes → 128 doubles per slice
       assert(Trainer.gradChunksFor(model.paramCount, budget) > 5)
       val sliced = Trainer.trainSync(data, model, cfg,

@@ -15,21 +15,21 @@ class NnSpec extends SparkSpec {
       // 5→3→5 two-view AE (views 3+2 wide), all layer types in play:
       // Linear, ReLU, BatchNorm (train mode), Sigmoid. Dropout = 0 so
       // the loss is deterministic.
-      val ae = TwoViewAe(3, 2,
+      val model = ArchZoo.concatAe(
         trunk = Mlp.blocks(Seq(5, 4, 3), Seq(0.0, 0.0)),
         dec1 = Mlp.blocks(Seq(3, 4, 3), Seq(0.0, 0.0), sigmoidOut = true),
         dec2 = Mlp.blocks(Seq(3, 4, 2), Seq(0.0, 0.0), sigmoidOut = true))
-      val (params, stats) = Kernel.init(ae, seed = 5)
+        .model
+      val (params, stats) = model.initParams(seed = 5)
       val x1 = randMat(8, 3, 11)
       val x2 = randMat(8, 2, 13)
       def loss(p: Array[Double]): Double =
-        Kernel.batchGradient(ae, p, stats, x1, x2,
-          new java.util.Random(0)).loss
-      val analytic = Kernel.batchGradient(ae, params, stats, x1, x2,
+        model.batchGradient(p, stats, x1, x2, new java.util.Random(0)).loss
+      val analytic = model.batchGradient(params, stats, x1, x2,
         new java.util.Random(0)).grads
       val h = 1e-6
       val rng = new java.util.Random(3)
-      val idxs = Seq.fill(60)(rng.nextInt(ae.paramCount)).distinct
+      val idxs = Seq.fill(60)(rng.nextInt(model.paramCount)).distinct
       for (i <- idxs) {
         val pPlus = params.clone(); pPlus(i) += h
         val pMinus = params.clone(); pMinus(i) -= h
@@ -67,35 +67,36 @@ class NnSpec extends SparkSpec {
     }
 
     it("loss decreases and training is seed-deterministic") {
-      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
       val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
         batchSize = 16, epochs = 12, seed = 21)
-      val t1 = Trainer.train(data, ae, cfg)
+      val t1 = Trainer.train(data, model, cfg)
       assert(t1.epochLosses.length == 12)
       val first3 = t1.epochLosses.take(3).sum / 3
       val last3 = t1.epochLosses.takeRight(3).sum / 3
       assert(last3 < first3 * 0.8,
         s"loss did not fall: ${t1.epochLosses.mkString(", ")}")
-      val t2 = Trainer.train(data, ae, cfg)
+      val t2 = Trainer.train(data, model, cfg)
       assert(t1.epochLosses == t2.epochLosses)
       assert(t1.params.sameElements(t2.params))
     }
 
     it("evaluateLoss + Inference round-trip with persisted model") {
-      val ae = TwoViewAe.cncSized(6, 4, hidden = Seq(8), embed = 3)
+      val arch = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3)
       val cfg = Trainer.Config(lr = 1e-2, batchSize = 32, epochs = 4)
-      val t = Trainer.train(data, ae, cfg)
-      val evalLoss = Trainer.evaluateLoss(data, ae, t.params, t.stats)
+      val t = Trainer.train(data, arch.model, cfg)
+      val evalLoss = Trainer.evaluateLoss(data, arch.model, t.params,
+        t.stats)
       assert(evalLoss > 0)
 
       val dir = java.nio.file.Files.createTempDirectory("graft-model")
         .toString
-      ModelIO.save(spark, dir, ae, t.params, t.stats)
-      val (ae2, p2, s2) = ModelIO.load(spark, dir)
-      assert(ae2 == ae && p2.sameElements(t.params) &&
+      ModelIO.save(spark, dir, arch.model, t.params, t.stats)
+      val (m2, p2, s2) = ModelIO.load(spark, dir)
+      assert(m2 == arch.model && p2.sameElements(t.params) &&
         s2.sameElements(t.stats))
 
-      val inf = Inference.embedAndRecon(data, ae2, p2, s2)
+      val inf = Inference.embedAndRecon(data, m2, p2, s2, arch.embed)
       val rows = inf.select("embedding", "recon_loss").collect()
       assert(rows.length == 64)
       assert(rows.forall(_.getSeq[Double](0).length == 3))
@@ -103,6 +104,35 @@ class NnSpec extends SparkSpec {
       // sanity: sqrt(Σ s²) ≤ Σ s for nonneg s), and both positive
       val sumPerSubject = rows.map(_.getDouble(1)).sum
       assert(evalLoss <= sumPerSubject + 1e-9)
+    }
+
+    it("evaluateLoss merges per-partition partials in partition order") {
+      import spark.implicits._
+      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
+      val (params, stats) = model.initParams(seed = 21)
+      val rows = data.select("x1", "x2").collect()
+        .map(r => (r.getSeq[Double](0), r.getSeq[Double](1)))
+      val df8 = spark.sparkContext.parallelize(rows.toSeq, 8).toDF("x1", "x2")
+      // driver-side reference: each glom() partition's sum of squares per
+      // recon output (s1hat, s2hat), merged in partition order
+      val partials = df8.rdd.glom().collect().filter(_.nonEmpty).map { rs =>
+        def m(i: Int) = DenseMatrix.tabulate(rs.length,
+          rs.head.getSeq[Double](i).length)((r, c) => rs(r).getSeq[Double](i)(c))
+        val (x1, x2) = (m(0), m(1))
+        val outs = model.evalOutputs(params, stats, x1, x2)
+        Seq(outs("s1hat") -> x1, outs("s2hat") -> x2).map { case (o, x) =>
+          val d = Kernel.rowNormalize(o)._1 - Kernel.rowNormalize(x)._1
+          var acc = 0.0
+          for (r <- 0 until d.rows; c <- 0 until d.cols) acc += d(r, c) * d(r, c)
+          acc
+        }
+      }
+      assert(partials.length == 8)
+      val want = (0 until 2).foldLeft(0.0) { (acc, j) =>
+        acc + math.sqrt(partials.foldLeft(0.0)(_ + _(j)))
+      }
+      for (_ <- 0 until 3)
+        assert(Trainer.evaluateLoss(df8, model, params, stats) == want)
     }
   }
 }

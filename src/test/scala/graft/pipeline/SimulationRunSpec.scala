@@ -18,5 +18,22 @@ class SimulationRunSpec extends SparkSpec {
       assert(nb.length == 5)
       assert(nb.forall(r => r.getDouble(1) >= 0 && r.getDouble(1) <= 1))
     }
+
+    it("compare: raw baselines then the 8 archs, on a small fixture") {
+      val prep = SimulationRun.prepare(spark, graft.SimFixture.smallPath,
+        splitAt = 16)
+      val all = graft.nn.ArchZoo.all(prep.splitAt, prep.d2, 0.1)
+      val rows = try SimulationRun.compare(prep, all, epochs = 1).collect()
+        finally prep.paired.unpersist()
+      assert(rows.map(_.getString(0)).toSeq == Seq("raw_x1", "raw_x2",
+        "raw_concat", "CNC_AE", "X_AE", "MM_AE", "JISAE", "JISAE-O1",
+        "JISAE-O2", "JISAE-O3", "MOCSS"))
+      val (raw, archs) = rows.splitAt(3)
+      assert(raw.forall(r => r.getDouble(1).isNaN && r.getDouble(2).isNaN))
+      assert(archs.forall(r => java.lang.Double.isFinite(r.getDouble(1)) &&
+        java.lang.Double.isFinite(r.getDouble(2))), rows.mkString("; "))
+      assert(rows.forall(r => r.getDouble(3) >= 0 && r.getDouble(3) <= 1),
+        rows.mkString("; "))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.nn.{Trainer, TwoViewAe}
+import graft.nn.TestNets
 
 /** Pins the soundness of the parallel full-breadth search
   * (per-trial workers + `RandomSearch.replay` combine):
@@ -26,7 +26,7 @@ class BreadthReplaySpec extends SparkSpec {
   }
 
   private def mkModel(h: RandomSearch.Hypers) =
-    Trainer.TwoViewModel(TwoViewAe.cncSized(6, 4, Seq(8), 3))
+    TestNets.cncSized(6, 4, Seq(8), 3).model
 
   it("hyperSequence matches what search draws") {
     val live = RandomSearch.search(data, mkModel, nTrials = 3, cv = 2,

@@ -123,17 +123,18 @@ class FloorRegressionSpec extends SparkSpec {
       // exercise (Linear, ReLU, BatchNorm train/eval, Dropout with the
       // 0<p<1 mask path, sigmoid decoders), trained through the same
       // Trainer.train path the waves used.
-      val ae = TwoViewAe(7, 5,
+      val model = ArchZoo.concatAe(
         trunk = Mlp.blocks(Seq(12, 8, 4), Seq(0.1, 0.4)),
         dec1 = Mlp.blocks(Seq(4, 8, 7), Seq(0.1, 0.0), sigmoidOut = true),
         dec2 = Mlp.blocks(Seq(4, 8, 5), Seq(0.6, 0.1), sigmoidOut = true))
+        .model
       val rng = new java.util.Random(2024)
       val rows = Seq.tabulate(48) { _ =>
         (Array.fill(7)(rng.nextDouble()), Array.fill(5)(rng.nextDouble()))
       }
       import spark.implicits._
       val df = rows.toDF("x1", "x2")
-      val t = Trainer.train(df, ae,
+      val t = Trainer.train(df, model,
         Trainer.Config(lr = 5e-3, weightDecay = 1e-6, batchSize = 16,
           epochs = 8, seed = 21))
       // exact-value pin (not just determinism): frozen from the r12

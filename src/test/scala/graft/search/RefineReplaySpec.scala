@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.nn.{Trainer, TwoViewAe}
+import graft.nn.TestNets
 
 /** Pins the determinism and replay-soundness of the in-basin
   * refinement stage (`RandomSearch.refineSequence` / `searchRefined` /
@@ -29,7 +29,7 @@ class RefineReplaySpec extends SparkSpec {
   }
 
   private def mkModel(h: Hypers) =
-    Trainer.TwoViewModel(TwoViewAe.cncSized(6, 4, Seq(8), 3))
+    TestNets.cncSized(6, 4, Seq(8), 3).model
 
   it("refineSequence is a pure function of (center, seed)") {
     val c = Hypers(7e-3, 3e-6, 32, 150, 0.16)

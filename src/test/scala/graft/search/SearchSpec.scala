@@ -1,7 +1,7 @@
 package graft.search
 
 import graft.SparkSpec
-import graft.nn.{ArchZoo, Trainer, TwoViewAe}
+import graft.nn.{ArchZoo, ModelIO, TestNets}
 import graft.pipeline.ResultTables
 import org.apache.spark.sql.functions._
 
@@ -21,7 +21,7 @@ class SearchSpec extends SparkSpec {
   }
 
   private def mkModel(h: RandomSearch.Hypers) =
-    Trainer.TwoViewModel(TwoViewAe.cncSized(6, 4, Seq(8), 3))
+    TestNets.cncSized(6, 4, Seq(8), 3).model
 
   describe("RandomSearch (M22)") {
     it("runs trials over the published space, prunes, finds the min") {
@@ -52,7 +52,7 @@ class SearchSpec extends SparkSpec {
     }
   }
 
-  describe("Retrain (M23) + GraphModelIO (S10)") {
+  describe("Retrain (M23) + ModelIO (S10)") {
     it("retrains with best hypers and round-trips the saved graph model") {
       val h = RandomSearch.Hypers(1e-3, 1e-7, 32, 30, 0.1)
       val dir = java.nio.file.Files.createTempDirectory("graft-retrain")
@@ -61,7 +61,7 @@ class SearchSpec extends SparkSpec {
       val re = Retrain.run(data, _ => arch.model, h, epochScale = 0.05,
         savePath = Some(dir))
       assert(re.epochLosses.length == 2) // 30 * 0.05 = 1.5 -> 2
-      val (m2, p2, s2) = GraphModelIO.load(spark, dir)
+      val (m2, p2, s2) = ModelIO.load(spark, dir)
       assert(m2.paramCount == arch.model.paramCount)
       assert(p2.sameElements(re.params) && s2.sameElements(re.stats))
     }
