@@ -47,8 +47,10 @@ object SimulationRun {
     val flagged = Splits
       .stratifiedFlag(labeled, "label", "sample_id", 0.8, 42)
     val train = flagged.filter(col("is_train"))
-    val scaled = Scalers.fitTransform(train)
-    val width = scaled.select(size(col("features"))).head().getInt(0)
+    // the fitted (mn, mx) frame is local: reading the width runs no job
+    val fitted = Scalers.fit(train)
+    val width = fitted.head().getSeq[Double](0).length
+    val scaled = Scalers.transformWith(train, fitted)
     val paired = scaled.select(
       col("sample_id"), col("label"), col("label_idx"),
       slice(col("features"), 1, splitAt).as("x1"),
@@ -92,17 +94,19 @@ object SimulationRun {
       // (reconloss_from_retrained_models.py:61-83; the published test
       // aggregate is AE_results.ipynb cell 30). The scaler REFITS on the
       // split it transforms — the reference's cell-81 quirk that
-      // Scalers.fitTransform reproduces for both splits.
-      val scaledTest = Scalers
-        .fitTransform(prep.flagged.filter(!col("is_train")))
-      val pairedTest = scaledTest.select(
-        col("sample_id"), col("label"), col("label_idx"),
-        slice(col("features"), 1, prep.splitAt).as("x1"),
-        slice(col("features"), prep.splitAt + 1, prep.d2).as("x2"))
-      val tst = Inference
-        .embedAndRecon(pairedTest, arch.model, params, stats, arch.embed)
-        .agg(avg("recon_loss"), stddev_pop("recon_loss")).head()
-      (tst.getDouble(0), tst.getDouble(1))
+      // Scalers.fitTransform reproduces for both splits. The test rows
+      // are cached so the fit and the transform read the input once.
+      val test = prep.flagged.filter(!col("is_train")).cache()
+      try {
+        val pairedTest = Scalers.fitTransform(test).select(
+          col("sample_id"), col("label"), col("label_idx"),
+          slice(col("features"), 1, prep.splitAt).as("x1"),
+          slice(col("features"), prep.splitAt + 1, prep.d2).as("x2"))
+        val tst = Inference
+          .embedAndRecon(pairedTest, arch.model, params, stats, arch.embed)
+          .agg(avg("recon_loss"), stddev_pop("recon_loss")).head()
+        (tst.getDouble(0), tst.getDouble(1))
+      } finally test.unpersist()
     })
   }
 

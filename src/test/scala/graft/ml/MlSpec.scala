@@ -39,6 +39,100 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  describe("GaussianNB.crossValidate (moment merge, one scoring pass)") {
+    import spark.implicits._
+    import graft.etl.Splits
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+    // seeded, overlapping classes (NB cannot separate them), three
+    // classes of unequal size and a constant last feature
+    val rnd = new scala.util.Random(11)
+    val noisy = (0 until 90).map { i =>
+      val cls = if (i < 84) i % 3 else 0
+      (f"s$i%03d", cls,
+        Seq(rnd.nextGaussian() + 0.6 * cls, rnd.nextGaussian() * (1 + cls),
+          rnd.nextGaussian() - 0.3 * cls, 0.5))
+    }.toDF("sample_id", "label_idx", "features").cache()
+
+    /** The per-fold algorithm: `fit` on the other folds, `predict` on
+      * the fold, accuracy as the mean hit rate. */
+    def perFoldOracle(df: org.apache.spark.sql.DataFrame, k: Int): Map[Int, Double] = {
+      val folded = Splits.stratifiedKFold(df, "label_idx", "sample_id", k, 2023)
+      (0 until k).flatMap { i =>
+        val test = folded.filter(col("fold") === i)
+        if (test.isEmpty) None
+        else {
+          val m = GaussianNB.fit(folded.filter(col("fold") =!= i))
+          Some(i -> GaussianNB.predict(test, m)
+            .agg(avg(when(col("pred") === col("label_idx").cast("long"), 1.0)
+              .otherwise(0.0))).head().getDouble(0))
+        }
+      }.toMap
+    }
+
+    def accuracies(df: org.apache.spark.sql.DataFrame, k: Int): Map[Int, Double] =
+      GaussianNB.crossValidate(df, k = k, seed = 2023).collect()
+        .map(r => r.getInt(0) -> r.getDouble(1)).toMap
+
+    it("scores every fold exactly as fit + predict on the other folds") {
+      val got = accuracies(noisy, 5)
+      assert(got == perFoldOracle(noisy, 5))
+      assert(got.size == 5)
+      assert(got.values.exists(_ < 1.0), s"fixture is separable: $got")
+    }
+
+    it("merged fold moments agree with fit on the same training rows") {
+      val folded = Splits.stratifiedKFold(noisy, "label_idx", "sample_id", 5, 2023)
+      val cells = GaussianNB.cells(folded, col("fold"), "features", "label_idx")
+      def close(a: Double, b: Double) =
+        math.abs(a - b) <= 1e-12 * math.max(math.abs(a), math.abs(b))
+      (0 until 5).foreach { i =>
+        val merged = GaussianNB.model(cells.filter(_.fold != i).toSeq)
+        val direct = GaussianNB.fit(folded.filter(col("fold") =!= i))
+        assert(merged.classes.sameElements(direct.classes))
+        assert(merged.priors.sameElements(direct.priors))
+        for (c <- direct.classes.indices; j <- direct.means(c).indices) {
+          assert(close(merged.means(c)(j), direct.means(c)(j)), s"mean $i/$c/$j")
+          assert(close(merged.vars(c)(j), direct.vars(c)(j)), s"var $i/$c/$j")
+        }
+      }
+    }
+
+    it("returns only the non-empty folds when strata are smaller than k") {
+      val tiny = noisy.filter(col("sample_id") < "s009")
+      assert(tiny.groupBy("label_idx").count().collect().forall(_.getLong(1) == 3))
+      val got = accuracies(tiny, 5)
+      assert(got.keySet == Set(0, 1, 2))
+      assert(got == perFoldOracle(tiny, 5))
+    }
+
+    it("submits the same small number of jobs whatever k is") {
+      val sc = spark.sparkContext
+      def jobsOf(k: Int): Int = {
+        val group = s"nb-cv-jobs-$k"
+        val jobs = new java.util.concurrent.atomic.AtomicInteger()
+        val l = new SparkListener {
+          override def onJobStart(e: SparkListenerJobStart): Unit =
+            if (e.properties.getProperty("spark.jobGroup.id") == group)
+              jobs.incrementAndGet()
+        }
+        sc.addSparkListener(l)
+        sc.setJobGroup(group, "job count")
+        try GaussianNB.crossValidate(noisy, k = k, seed = 2023).collect()
+        finally {
+          sc.clearJobGroup()
+          org.apache.spark.graftbridge.ListenerBridge.drain(sc)
+          sc.removeSparkListener(l)
+        }
+        jobs.get()
+      }
+      val (k4, k10) = (jobsOf(4), jobsOf(10))
+      assert(k4 == k10, s"k=4: $k4 jobs, k=10: $k10 jobs")
+      assert(k4 <= 5, s"$k4 jobs")
+      info(s"one crossValidate call submits $k4 jobs")
+    }
+  }
+
   describe("Clustering (M2/M13)") {
     import spark.implicits._
     val blobs = Seq(
