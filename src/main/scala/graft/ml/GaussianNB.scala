@@ -97,7 +97,7 @@ object GaussianNB {
 
   def fit(df: DataFrame, featuresCol: String = "features",
       labelCol: String = "label_idx", varSmoothing: Double = 1e-9): Model =
-    model(cells(df, lit(0), featuresCol, labelCol), varSmoothing)
+    model(cells(df, lit(0), featuresCol, labelCol).toSeq, varSmoothing)
 
   /** Index into `m.classes` of the most likely class of `x`. */
   private def classify(m: Model, x: collection.Seq[Double]): Int = {
