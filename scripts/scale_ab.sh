@@ -3,7 +3,8 @@
 # each leg is a fresh JVM running graft.QueryTime over the query list at
 # one core count; legs alternate 32,8,32,8,... so box noise lands on
 # both arms. Per-leg steal%% sampled from /proc/stat (the graft.Bench
-# instrument). CSV to stdout: cpus,leg,query,kind,seconds + steal rows.
+# instrument). CSV to stdout: cpus,leg,query,kind,seconds + steal rows
+# + one cpus,leg,exit,exit,<code> row per leg (the JVM's exit status).
 # Usage: scale_ab.sh <cp> <legs_per_arm> <sfdir> <query...>
 set -u
 CP="$1"; LEGS="$2"; SF="$3"; shift 3
@@ -19,7 +20,9 @@ runleg() { # cpus leg
     | perl -ne 'BEGIN{$c=shift;$l=shift}
         if (/\[qtime\] (\S+)\s+cold=\s*([0-9.]+)s\s+warm=\s*([0-9.]+)s/) {
           print "$c,$l,$1,cold,$2\n$c,$l,$1,warm,$3\n" }' "$cpus" "$leg"
+  local rc="${PIPESTATUS[0]}"
   read -r t1 s1 <<< "$(cpustat)"
+  echo "$cpus,$leg,exit,exit,$rc"
   echo "$cpus,$leg,steal,steal,$(awk -v a="$t0" -v b="$t1" -v c="$s0" -v d="$s1" 'BEGIN{ if (b>a) printf "%.3f", (d-c)*100/(b-a); else print -1 }')"
 }
 

@@ -3,7 +3,9 @@
 # alternate arm A (cp_A) and arm B (cp_B); each leg is a fresh JVM
 # running graft.QueryTime over every contract query (cold+warm pairs),
 # so box drift lands on both arms. Per-leg steal%% from /proc/stat.
-# CSV: arm,leg,query,kind,seconds (+ steal rows).
+# CSV: arm,leg,query,kind,seconds (+ steal rows, and one
+# arm,leg,exit,exit,<code> row per leg: the JVM's exit status, so a leg
+# that dies mid-suite shows as a nonzero code, not just fewer rows).
 # Usage: suite_ab.sh <cp_A> <cp_B> <legs_per_arm> <sfdir>
 set -u
 CP_A="$1"; CP_B="$2"; LEGS="$3"; SF="$4"
@@ -17,7 +19,9 @@ runleg() { # arm cp leg
     | perl -ne 'BEGIN{$a=shift;$l=shift}
         if (/\[qtime\] (\S+)\s+cold=\s*([0-9.]+)s\s+warm=\s*([0-9.]+)s/) {
           print "$a,$l,$1,cold,$2\n$a,$l,$1,warm,$3\n" }' "$arm" "$leg"
+  local rc="${PIPESTATUS[0]}"
   read -r t1 s1 <<< "$(cpustat)"
+  echo "$arm,$leg,exit,exit,$rc"
   echo "$arm,$leg,steal,steal,$(awk -v a="$t0" -v b="$t1" -v c="$s0" -v d="$s1" 'BEGIN{ if (b>a) printf "%.3f", (d-c)*100/(b-a); else print -1 }')"
 }
 echo "arm,leg,query,kind,seconds"

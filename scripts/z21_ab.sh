@@ -4,7 +4,8 @@
 # graft.QueryTime on z21 three times (3 cold/warm pairs); per-leg
 # hypervisor steal% is sampled from /proc/stat around the leg, the same
 # instrument graft.Bench trusts. Output: CSV on stdout
-#   arm,leg,pass,kind,seconds  plus  arm,leg,steal,steal,<steal_pct> rows.
+#   arm,leg,pass,kind,seconds  plus  arm,leg,steal,steal,<steal_pct> and
+#   arm,leg,exit,exit,<jvm_exit_code> rows.
 # Usage: z21_ab.sh <cp_A> <cp_B> <legs_per_arm> [query] [sfdir]
 set -u
 CP_A="$1"; CP_B="$2"; LEGS="${3:-5}"
@@ -22,7 +23,9 @@ runleg() { # arm cp leg
     | perl -ne 'BEGIN{$a=shift;$l=shift;$n=0}
         if (/cold=\s*([0-9.]+)s\s+warm=\s*([0-9.]+)s/) { $n++;
           print "$a,$l,$n,cold,$1\n$a,$l,$n,warm,$2\n" }' "$arm" "$leg"
+  local rc="${PIPESTATUS[0]}"
   read -r t1 s1 <<< "$(cpustat)"
+  echo "$arm,$leg,exit,exit,$rc"
   echo "$arm,$leg,steal,steal,$(awk -v a="$t0" -v b="$t1" -v c="$s0" -v d="$s1" 'BEGIN{ if (b>a) printf "%.3f", (d-c)*100/(b-a); else print -1 }')"
 }
 

@@ -200,14 +200,25 @@ object Bench {
     if (out.size == calibsMt.size) Set.empty else out
   }
 
+  /** Timed passes, from `SPARK_GRAFT_BENCH_REPS` (absent → 5). */
+  private[graft] def repsFrom(raw: Option[String]): Int =
+    Sessions.positiveInt("SPARK_GRAFT_BENCH_REPS", raw, 5)
+
+  /** Local threads, from `SPARK_GRAFT_CPUS` (absent → 4). */
+  private[graft] def cpusFrom(raw: Option[String]): Int =
+    Sessions.positiveInt("SPARK_GRAFT_CPUS", raw, 4)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // both parsed before the session starts: a typo fails here, not
+    // after the untimed pre-pass over every query
+    val cpus = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))
+    val reps = repsFrom(sys.env.get("SPARK_GRAFT_BENCH_REPS"))
     // canonical "sf" value in BOTH emitted lines: the directory basename
     // (e.g. "sf0.1") — a full path in one line and a basename in the other
     // would mis-key downstream consumers matching on sf.
     val sfName = new java.io.File(sfDir).getName
-    val spark = Sessions.builder(s"local[$cpus]", cpus).getOrCreate()
+    val spark = Sessions.builder(s"local[$cpus]", cpus.toString).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JVM/codegen/session init and file-index caching
     // must not be billed to whichever query happens to run first.
@@ -252,8 +263,6 @@ object Bench {
     // full-precision line — identical work every pass, so any spread
     // there is BOX LOAD by construction, separating "the engine
     // regressed" from "the box was busy" without guessing.
-    val reps = math.max(1,
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "5").toInt)
     // deterministic single-thread arithmetic, ~0.2 s quiet; the JIT sees
     // identical bytecode every pass, and the result is consumed so the
     // loop cannot be elided
@@ -331,9 +340,8 @@ object Bench {
         (field(s1) - field(s0)) * 100.0 / (s1._1 - s0._1)
       case _ => -1.0 // unknown, flagged as such
     }
-    val mtThreads = cpus.toInt
     calibrate() // untimed JIT warm-up of the loop itself
-    calibrateMt(mtThreads) // and of the threaded variant
+    calibrateMt(cpus) // and of the threaded variant
     val calibs = scala.collection.mutable.ArrayBuffer.empty[Double]
     val calibsMt = scala.collection.mutable.ArrayBuffer.empty[Double]
     val steals = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -345,7 +353,7 @@ object Bench {
     // exactly when the suite is broken — review r14)
     val perRep: Seq[Seq[(String, Double, Boolean)]] = (1 to reps).map { _ =>
       calibs += calibrate()
-      calibsMt += calibrateMt(mtThreads)
+      calibsMt += calibrateMt(cpus)
       val s0 = cpuStat()
       val rep = SparkEntry.queries.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -427,7 +435,7 @@ object Bench {
     val calibJson = calibs.map(f3)
       .mkString(""","calib":[""", ",", "]") +
       calibsMt.map(f3).mkString(s""","calib_mt":[""", ",", "]") +
-      s""","calib_mt_threads":$mtThreads""" +
+      s""","calib_mt_threads":$cpus""" +
       steals.map(v => f(v, 2)).mkString(""","steal_pct":[""", ",", "]") +
       iowaits.map(v => f(v, 2)).mkString(""","iowait_pct":[""", ",", "]")
     val full = renderLine(results, sfName, 3,

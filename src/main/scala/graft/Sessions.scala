@@ -28,9 +28,16 @@ object Sessions {
   def master(defaultMaster: String): String =
     sys.env.getOrElse("SPARK_GRAFT_MASTER", defaultMaster)
 
-  /** True when the resolved master runs executors in separate JVMs. */
-  def isSeparateJvm(defaultMaster: String): Boolean =
-    master(defaultMaster).startsWith("local-cluster")
+  /** Parses the value `raw` of the variable `name` (absent → `default`).
+    * A malformed or non-positive value fails with a message naming the
+    * variable and the value, not a bare NumberFormatException. */
+  private[graft] def positiveInt(name: String, raw: Option[String],
+      default: Int): Int =
+    raw.fold(default) { v =>
+      val n = v.toIntOption
+      require(n.exists(_ > 0), s"$name must be a positive integer, got '$v'")
+      n.get
+    }
 
   /** Builder with the graft defaults; forwards the driver classpath to
     * the forked workers when the master is local-cluster.

@@ -9,9 +9,7 @@ import scala.collection.concurrent.TrieMap
   * A persisted frame is bound to the SparkSession that built it: if that
   * session is stopped and a new one started in the same JVM, the stale
   * entry would be permanently broken. A hit whose session has stopped is
-  * therefore dropped and rebuilt instead of returned. Tests can wipe the
-  * whole cache via [[clearForTest]] (mirrors
-  * `Clustering.clearModelCacheForTest`).
+  * therefore dropped and rebuilt instead of returned.
   */
 final class DfCache {
   private val m = TrieMap.empty[String, DataFrame]
@@ -23,12 +21,4 @@ final class DfCache {
         m.put(key, df)
         df
       }
-
-  private[graft] def clearForTest(): Unit = {
-    m.values.foreach { df =>
-      try df.unpersist()
-      catch { case _: Throwable => () }
-    }
-    m.clear()
-  }
 }

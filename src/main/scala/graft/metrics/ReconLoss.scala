@@ -3,22 +3,18 @@ package graft.metrics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Reconstruction-loss and orthogonality aggregates over array-column
-  * embeddings — all codegen'd higher-order expressions, no UDFs.
+/** Row-wise reconstruction-loss helpers over array columns — all
+  * codegen'd higher-order expressions, no UDFs.
   *
   * Reference semantics:
   *  - F1 row L2-normalize: `F.normalize(x, p=2, dim=1)`
   *    (Evaluation_Auxiliary/model_structures.py:1470-1471).
-  *  - A9 batch loss: Frobenius norm of difference of row-normalized
-  *    matrices (Simulation_Models/CNC_AE_model_selection.py:209-229).
   *  - A10 per-subject loss: row-wise L2 of the difference
   *    (Evaluation_Auxiliary/reconloss_from_retrained_models.py:45,69-72).
-  *  - A11 O1 ortho: mean of elementwise product of normalized matrices
-  *    (model_structures.py:1466-1474).
-  *  - A12 O2: Σ diag(z12·z1ᵀ)² — squared per-SAMPLE dots
-  *    (Simulation_Models/JISAE-O2_selection.py:266-305).
-  *  - A13 O3: Σ diag(z12ᵀ·z1)² — squared per-DIMENSION dots
-  *    (Simulation_Models/JISAE-O3_selection.py:266-300).
+  *
+  * The batch losses (A9 Frobenius, A11–A13 O1/O2/O3 ortho) have one
+  * implementation each, in the training kernel:
+  * `Kernel.frobeniusNormalizedLoss` and `OrthoO{1,2,3}Term`.
   */
 object ReconLoss {
 
@@ -50,44 +46,8 @@ object ReconLoss {
        rowDist(l2NormalizeRows(col(x2)), l2NormalizeRows(col(x2hat))))
         .as("recon_loss"))
 
-  /** A9 — batch Frobenius loss: ‖A'−B'‖_F over row-normalized matrices. */
-  def frobenius(df: DataFrame, a: String, b: String): Double =
-    df.select(aggregate(
-        zip_with(l2NormalizeRows(col(a)), l2NormalizeRows(col(b)),
-          (x, y) => (x - y) * (x - y)),
-        lit(0.0), (acc, v) => acc + v).as("ss"))
-      .agg(sqrt(sum("ss"))).head().getDouble(0)
-
-  /** A11 — O1 orthogonality: mean over ALL matrix elements of the
-    * elementwise product of row-normalized embeddings. */
-  def orthoO1(df: DataFrame, a: String, b: String): Double =
-    df.select(
-        aggregate(zip_with(l2NormalizeRows(col(a)), l2NormalizeRows(col(b)),
-          (x, y) => x * y), lit(0.0), (acc, v) => acc + v).as("rowSum"),
-        size(col(a)).as("w"))
-      .agg(sum("rowSum") / sum("w")).head().getDouble(0)
-
-  /** A12 — O2 orthogonality: Σ_rows (row dot of normalized embeddings)². */
-  def orthoO2(df: DataFrame, a: String, b: String): Double =
-    df.select(aggregate(
-        zip_with(l2NormalizeRows(col(a)), l2NormalizeRows(col(b)),
-          (x, y) => x * y), lit(0.0), (acc, v) => acc + v).as("dot"))
-      .agg(sum(pow(col("dot"), 2))).head().getDouble(0)
-
-  /** A13 — O3 orthogonality: Σ_dims (per-dimension dot across rows)².
-    * Long-form posexplode → per-dim sums: one shuffle of (dim, product)
-    * pairs, map-side combined. */
-  def orthoO3(df: DataFrame, a: String, b: String): Double =
-    df.select(posexplode(
-        zip_with(l2NormalizeRows(col(a)), l2NormalizeRows(col(b)),
-          (x, y) => x * y)).as(Seq("dim", "prod")))
-      .groupBy("dim").agg(sum("prod").as("colDot"))
-      .agg(sum(pow(col("colDot"), 2))).head().getDouble(0)
-
-  /** F7 — elementwise mean of two/three embedding arrays
-    * (embedding_from_retrained_models.py:81; mocss.py:527). */
+  /** F7 — elementwise mean of two embedding arrays
+    * (embedding_from_retrained_models.py:81). */
   def meanOf2(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => (x + y) / 2)
-  def meanOf3(a: Column, b: Column, c: Column): Column =
-    zip_with(zip_with(a, b, (x, y) => x + y), c, (xy, z) => (xy + z) / 3)
 }

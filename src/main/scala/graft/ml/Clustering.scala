@@ -69,14 +69,6 @@ object Clustering {
       }
     })
 
-  /** Assigns `pred` cells with an already-fit model (no re-fit). */
-  def predictWith(model: KMeansModel, df: DataFrame,
-      featuresCol: String = "features"): DataFrame = {
-    val prepared = df.withColumn("__vec", array_to_vector(col(featuresCol)))
-    model.transform(prepared).drop("__vec")
-      .withColumn("pred", col("pred").cast("long"))
-  }
-
   /** Adds `pca` (array column) of the first d principal components. */
   def pca(df: DataFrame, d: Int,
       featuresCol: String = "features"): DataFrame = {

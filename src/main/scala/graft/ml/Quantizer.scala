@@ -170,7 +170,6 @@ object Quantizer {
       case None =>
         import spark.implicits._
         val s2 = math.min(n, TrainPointsPerCentroid * k1.toLong * k2)
-        val coarseCentArr = coarse.map(_.toArray).toArray
         val fitted = hashSample(df, idCol, n, s2, seed + 1)
           .select(col(idCol).cast("long").as("id"), col(featCol).as("f"),
             graft.functions.NearestCentroid

@@ -4,7 +4,6 @@ import breeze.linalg.DenseMatrix
 import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.util.LongAccumulator
 
 /** Distributed mini-batch AE training (M15/M25, SURVEY §3.1/§4.3).
   *
@@ -15,9 +14,8 @@ import org.apache.spark.util.LongAccumulator
   * each epoch repartitions rows so batch b lives in partition b, and
   * each step is a single-partition Spark job computing (loss, grad, BN
   * batch stats) where the rows are; the driver holds only Adam moments
-  * and BN running stats. For cluster-scale batches the same kernel is
-  * aggregable across partitions (grads are sums) — the batch-per-
-  * partition layout is the small-batch fast path.
+  * and BN running stats. [[train]] is the only fit loop: search
+  * trials, retrains and specs all go through it.
   */
 object Trainer {
 
@@ -111,132 +109,6 @@ object Trainer {
       losses += (if (seen > 0) epochLoss / seen else 0.0)
     }
     base.unpersist(false)
-    Trained(model, params, stats, losses.toSeq)
-  }
-
-  /** Default per-slice byte bound for the chunked gradient reduction:
-    * 64 MiB of doubles. SURVEY §4.4 risk register: the hyperparameter
-    * search maximum is a ~45 M-param model, so a monolithic gradient is
-    * ~360 MB — and a treeReduce merge holds TWO operands plus the
-    * driver's final copy (~1 GB transient), hostile to an 8 GiB driver.
-    * 64 MiB slices bound every merge and the driver fetch to ~128 MiB
-    * regardless of model width; 45 M params reduce in 6 sequential
-    * slice jobs (latency traded for a hard memory ceiling). */
-  val DefaultGradSliceBytes: Long = 64L << 20
-
-  /** Slice count that keeps every in-flight gradient slice within
-    * `maxSliceBytes`: ceil(paramCount·8 / maxSliceBytes), min 1. */
-  def gradChunksFor(paramCount: Long,
-      maxSliceBytes: Long = DefaultGradSliceBytes): Int =
-    math.max(1L, (paramCount * 8 + maxSliceBytes - 1) / maxSliceBytes).toInt
-
-  /** Cluster-scale synchronous variant: ONE gradient step per epoch,
-    * each partition acting as a local batch (torch DataParallel
-    * semantics: per-replica BatchNorm statistics, per-replica batch-
-    * local loss terms), gradients SUMMED across partitions with
-    * treeAggregate, single Adam step + BN running update on the driver.
-    * This is the 100 TB path: weights ship once per epoch, the gradient
-    * reduction is O(log partitions), and no epoch-wise reshuffle is
-    * required. Exact mini-batch parity is what [[train]] provides; this
-    * trades batch-order semantics for cluster throughput.
-    *
-    * `gradChunks > 1` bounds the reduction/driver peak to
-    * paramCount/gradChunks doubles: per-partition gradients are cached
-    * once per epoch, then reduced slice by slice (the SURVEY §4.4
-    * per-layer-aggregation mitigation for 45 M-param search maxima —
-    * sequential chunk jobs trade latency for bounded memory).
-    * `gradChunks = 0` (the default) derives the count from
-    * [[gradChunksFor]] — small models reduce whole (1 chunk), wide
-    * search candidates are sliced automatically. */
-  def trainSync(df: DataFrame, model: AeModel, cfg: Config,
-      x1Col: String = "x1", x2Col: String = "x2",
-      treeDepth: Int = 2, gradChunks: Int = 0,
-      maxGradSliceBytes: Long = DefaultGradSliceBytes): Trained = {
-    val resolvedChunks =
-      if (gradChunks > 0) gradChunks
-      else gradChunksFor(model.paramCount, maxGradSliceBytes)
-    val rdd = df.select(x1Col, x2Col).rdd
-      .map(r => (r.getSeq[Double](0).toArray, r.getSeq[Double](1).toArray))
-      .cache()
-    rdd.count()
-    val (params, stats) = model.initParams(cfg.seed)
-    val adam = new Adam(model.paramCount, cfg.lr, cfg.weightDecay)
-    val losses = new scala.collection.mutable.ArrayBuffer[Double]
-    val sc = df.sparkSession.sparkContext
-
-    for (epoch <- 0 until cfg.epochs) {
-      val bcParams = sc.broadcast(params.clone())
-      val bcStats = sc.broadcast(stats.clone())
-      val modelRef = model
-      val seedBase = cfg.seed * 1000003L + epoch * 1009L
-      val partial = rdd.mapPartitionsWithIndex { (pid, it) =>
-        val rows = it.toArray
-        if (rows.isEmpty) Iterator.empty
-        else Iterator(modelRef.batchGradient(bcParams.value, bcStats.value,
-          mat(rows.map(_._1).toIndexedSeq), mat(rows.map(_._2).toIndexedSeq),
-          new java.util.Random(seedBase + pid)))
-      }
-      def mergeStats(a: Kernel.BatchResult,
-          b: Kernel.BatchResult): Kernel.BatchResult = {
-        var i = 0
-        // weighted merge of per-replica BN batch stats
-        while (i < a.batchStats.length) {
-          a.batchStats(i) = (a.batchStats(i) * a.n + b.batchStats(i) * b.n) /
-            (a.n + b.n)
-          i += 1
-        }
-        Kernel.BatchResult(a.loss * a.n / (a.n + b.n) +
-          b.loss * b.n / (a.n + b.n), a.grads, a.batchStats, a.n + b.n)
-      }
-
-      val (aggLoss, aggStats, fullGrads) =
-        if (resolvedChunks <= 1) {
-          val agg = partial.treeReduce({ (a, b) =>
-            var i = 0
-            while (i < a.grads.length) { a.grads(i) += b.grads(i); i += 1 }
-            mergeStats(a, b)
-          }, treeDepth)
-          (agg.loss, agg.batchStats, agg.grads)
-        } else {
-          // cache per-partition results once; reduce loss/stats without
-          // gradients, then the gradient slice by slice
-          val cached = partial.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val light = cached
-            .map(r => Kernel.BatchResult(r.loss, Array.empty,
-              r.batchStats.clone(), r.n))
-            .treeReduce(mergeStats, treeDepth)
-          val grads = new Array[Double](model.paramCount)
-          val chunkLen = (model.paramCount + resolvedChunks - 1) / resolvedChunks
-          for (c <- 0 until resolvedChunks) {
-            val lo = c * chunkLen
-            val hi = math.min(lo + chunkLen, model.paramCount)
-            if (hi > lo) {
-              val slice = cached
-                .map(r => java.util.Arrays.copyOfRange(r.grads, lo, hi))
-                .treeReduce({ (a, b) =>
-                  var i = 0
-                  while (i < a.length) { a(i) += b(i); i += 1 }
-                  a
-                }, treeDepth)
-              System.arraycopy(slice, 0, grads, lo, hi - lo)
-            }
-          }
-          cached.unpersist(false)
-          (light.loss, light.batchStats, grads)
-        }
-
-      adam.step(params, fullGrads)
-      var i = 0
-      while (i < stats.length) {
-        stats(i) = (1 - Kernel.BnMomentum) * stats(i) +
-          Kernel.BnMomentum * aggStats(i)
-        i += 1
-      }
-      losses += aggLoss
-      bcParams.destroy(); bcStats.destroy()
-    }
-    rdd.unpersist(false)
     Trained(model, params, stats, losses.toSeq)
   }
 

@@ -216,13 +216,6 @@ object SimilarityOps {
 
   private val sigCache = new graft.etl.DfCache
 
-  /** Test hook: wipe the signature/count memos (ADVICE r4 — mirrors
-    * `Clustering.clearModelCacheForTest`). */
-  private[graft] def clearCachesForTest(): Unit = {
-    sigCache.clearForTest()
-    countCache.clear()
-  }
-
   /** Per-dataset persisted signature frame: the self-join in the ANN
     * queries derives BOTH sides from this frame, so materializing it once
     * (MEMORY_AND_DISK — spills, never OOMs) halves the scan+hash work and

@@ -413,19 +413,6 @@ object TextOps {
     scala.collection.concurrent.TrieMap
       .empty[String, graft.functions.BlockedBloom]
 
-  /** Test hook: wipe the shingle/simhash memos (ADVICE r4). */
-  private[graft] def clearCachesForTest(): Unit = {
-    tokenCache.clearForTest()
-    shingleCache.clearForTest()
-    spanHashCache.clearForTest()
-    simhashBandCache.clearForTest()
-    verifiedPairsCache.clearForTest()
-    gramCountCache.clearForTest()
-    hllRegisterCache.clearForTest()
-    cmsSketchCache.clearForTest()
-    bloomCache.clear()
-  }
-
   /** Base for the Horner span-hash fold (shared with the DuckDB
     * oracle CTEs). */
   private val SpanB = graft.functions.SpanHash.B

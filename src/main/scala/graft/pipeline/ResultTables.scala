@@ -59,11 +59,4 @@ object ResultTables {
       .mode(if (append) "append" else "overwrite")
       .option("sep", "\t").option("header", true)
       .csv(path)
-
-  /** S9 — driver-side text report (optuna.txt analog). */
-  def writeTextReport(path: String, content: String): Unit = {
-    val p = java.nio.file.Paths.get(path)
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    java.nio.file.Files.writeString(p, content)
-  }
 }

@@ -43,14 +43,12 @@ object RandomSearch {
   }
 
   // Published search space (CNC_AE_model_selection.py:331-340; ortho
-  // multiplier JISAE-O1_selection.py:415). Shared by the uniform
-  // sampler and the in-basin refinement so refined draws can never
-  // leave the space the reference searched.
+  // multiplier JISAE-O1_selection.py:415).
   private val LrLo = 1e-5; private val LrHi = 1e-2
   private val L2Lo = 1e-8; private val L2Hi = 1e-5
   private val OrthoLo = 1e-3; private val OrthoHi = 1e3
-  private[graft] val BatchGrid = Seq(32, 64, 128, 256, 512)
-  private[graft] val EpochGrid = Seq(30, 60, 90, 120, 150)
+  private val BatchGrid = Seq(32, 64, 128, 256, 512)
+  private val EpochGrid = Seq(30, 60, 90, 120, 150)
 
   def sample(rng: scala.util.Random): Hypers = {
     def logUniform(lo: Double, hi: Double): Double =
@@ -71,64 +69,6 @@ object RandomSearch {
     val rng = new scala.util.Random(seed)
     Vector.fill(nTrials)(sample(rng))
   }
-
-  /** In-basin refinement draws: `nTrials` local perturbations of
-    * `center` in the PUBLISHED log-space (the reference's Optuna TPE
-    * exploits the basin it finds with dozens of local refinements —
-    * CNC_AE_model_selection.py:528-534 via optuna.samplers.TPESampler;
-    * QUALITY_r10 measured that adaptive refinement as the one remaining
-    * unreproduced search behavior). This is the deterministic,
-    * replay-compatible counterpart: a pure function of (center, seed) —
-    * no adaptive state inside a round, so refine trials parallelize
-    * across workers exactly like base trials, and the sequential
-    * bookkeeping replays (`RefineReplaySpec`).
-    *
-    * Geometry: continuous hypers move by U(−1,1)·span/shrink in log
-    * space, clipped to the published bounds (shrink=8 → lr explores
-    * ±e^0.86 ≈ 0.42–2.4× around the center); grid hypers (batch,
-    * epochs) step −1/0/+1 with probability ¼/½/¼, clamped to the grid.
-    * 5 rng draws per trial in Hypers field order, same discipline as
-    * `sample`, so the sequence is positionally reproducible. */
-  def refineSequence(center: Hypers, nTrials: Int, seed: Long,
-      shrink: Double = 8.0): Seq[Hypers] = {
-    val rng = new scala.util.Random(seed)
-    def logLocal(c: Double, lo: Double, hi: Double): Double = {
-      val span = math.log(hi) - math.log(lo)
-      val x = math.log(c) + (rng.nextDouble() * 2 - 1) * span / shrink
-      // clip in log space, then clamp again linearly: exp(log(hi)) can
-      // overshoot hi by an ulp and leave the published space
-      math.max(lo, math.min(hi,
-        math.exp(math.max(math.log(lo), math.min(math.log(hi), x)))))
-    }
-    def gridStep(grid: Seq[Int], c: Int): Int = {
-      val i = math.max(0, grid.indexOf(c))
-      val u = rng.nextDouble()
-      val j = if (u < 0.25) i - 1 else if (u < 0.75) i else i + 1
-      grid(math.max(0, math.min(grid.length - 1, j)))
-    }
-    Vector.fill(nTrials) {
-      Hypers(
-        lr = logLocal(center.lr, LrLo, LrHi),
-        l2 = logLocal(center.l2, L2Lo, L2Hi),
-        batchSize = gridStep(BatchGrid, center.batchSize),
-        epochs = gridStep(EpochGrid, center.epochs),
-        orthoMultiplier = logLocal(center.orthoMultiplier, OrthoLo, OrthoHi))
-    }
-  }
-
-  /** Seed for refinement round `round` (0-based) of a search seeded
-    * `seed` — distinct per round so a re-centered round that lands on
-    * the same center still draws fresh perturbations. */
-  def refineSeed(seed: Long, round: Int): Long = seed + 101L * (round + 1)
-
-  /** Round-`round` refinement hypers given everything evaluated so far
-    * (base search + earlier refine rounds): centered on the current
-    * best. Pure function of (soFar.best.hypers, seed, round) — workers
-    * re-derive it from replayed losses without any shared plan file. */
-  def nextRefineHypers(soFar: SearchResult, perRound: Int, seed: Long,
-      round: Int, shrink: Double = 8.0): Seq[Hypers] =
-    refineSequence(soFar.best.hypers, perRound, refineSeed(seed, round),
-      shrink)
 
   /** One trial's fold loop + MedianPruner bookkeeping, shared verbatim
     * by the live `search` (lossAt trains a fold) and `replay` (lossAt
@@ -173,49 +113,28 @@ object RandomSearch {
     * counts for CI-scale runs (1.0 = reference semantics). */
   def search(df: DataFrame, mkModel: Hypers => AeModel, nTrials: Int,
       cv: Int = 5, seed: Long = 42, warmupSteps: Int = 2,
-      epochScale: Double = 1.0, keyCol: String = "sample_id"): SearchResult =
-    searchRefined(df, mkModel, nTrials, rounds = 0, perRound = 0, cv = cv,
-      seed = seed, warmupSteps = warmupSteps, epochScale = epochScale,
-      keyCol = keyCol)
-
-  /** Live search + `rounds` × `perRound` in-basin refinement trials,
-    * one continuous pruning history (the reference's TPE refinements
-    * join the same Optuna study and MedianPruner). Each round is
-    * centered on the best-so-far (re-centering happens at round
-    * BARRIERS, not per trial, so the trials inside a round stay
-    * independent and worker-parallelizable); trial numbering runs
-    * straight through the refine rounds. `rounds = 0` is the plain
-    * uniform search. */
-  def searchRefined(df: DataFrame, mkModel: Hypers => AeModel,
-      nTrials: Int, rounds: Int, perRound: Int, cv: Int = 5,
-      seed: Long = 42, warmupSteps: Int = 2, epochScale: Double = 1.0,
-      shrink: Double = 8.0, keyCol: String = "sample_id"): SearchResult = {
+      epochScale: Double = 1.0, keyCol: String = "sample_id"): SearchResult = {
     val folded = Splits.kFoldColumn(df, keyCol, cv, 21).cache()
     folded.count()
 
     // foldLossHistory(f) = completed trials' loss at fold index f
     val history = Array.fill(cv)(
       scala.collection.mutable.ArrayBuffer.empty[Double])
-    val results = scala.collection.mutable.ArrayBuffer.empty[TrialResult]
-
-    def run(hs: Seq[Hypers]): Unit = hs.foreach { h =>
-      val t = results.length
-      val epochs = math.max(1, math.round(h.epochs * epochScale).toInt)
-      val model = mkModel(h)
-      results += runTrial(t, h, cv, warmupSteps, history, { f =>
-        val trainDf = folded.filter(col("fold") =!= f)
-        val valDf = folded.filter(col("fold") === f)
-        val trained = Trainer.train(trainDf, model,
-          Trainer.Config(lr = h.lr, weightDecay = h.l2,
-            batchSize = h.batchSize, epochs = epochs, seed = 21))
-        Trainer.evaluateLoss(valDf, model, trained.params, trained.stats)
-      })
+    val results = hyperSequence(nTrials, seed).zipWithIndex.map {
+      case (h, t) =>
+        val epochs = math.max(1, math.round(h.epochs * epochScale).toInt)
+        val model = mkModel(h)
+        runTrial(t, h, cv, warmupSteps, history, { f =>
+          val trainDf = folded.filter(col("fold") =!= f)
+          val valDf = folded.filter(col("fold") === f)
+          val trained = Trainer.train(trainDf, model,
+            Trainer.Config(lr = h.lr, weightDecay = h.l2,
+              batchSize = h.batchSize, epochs = epochs, seed = 21))
+          Trainer.evaluateLoss(valDf, model, trained.params, trained.stats)
+        })
     }
-    run(hyperSequence(nTrials, seed))
-    for (r <- 0 until rounds)
-      run(nextRefineHypers(finish(results.toSeq), perRound, seed, r, shrink))
     folded.unpersist()
-    finish(results.toSeq)
+    finish(results)
   }
 
   /** Replays the sequential search bookkeeping over precomputed
@@ -235,45 +154,4 @@ object RandomSearch {
       runTrial(t, hypers(t), cv, warmupSteps, history, foldLosses(t))
     })
   }
-
-  /** Replays a refined search (`searchRefined`) over precomputed fold
-    * losses: the first `baseHypers.length` loss rows are the base
-    * trials, followed by `rounds` × `perRound` refine-trial rows in
-    * round order. Round hypers are re-derived from the replayed
-    * best-so-far exactly as the live walk derives them, so a live
-    * `searchRefined` and this replay can never drift
-    * (`RefineReplaySpec`). Pass `rounds` smaller than the loss rows
-    * cover to STOP after that many rounds — `refineRoundPlan` uses that
-    * to derive the next round's hypers for workers. */
-  def replayRefined(baseHypers: Seq[Hypers], foldLosses: Seq[Seq[Double]],
-      rounds: Int, perRound: Int, cv: Int, seed: Long,
-      warmupSteps: Int = 2, shrink: Double = 8.0): SearchResult = {
-    require(foldLosses.length == baseHypers.length + rounds * perRound,
-      s"${foldLosses.length} loss rows vs ${baseHypers.length} base + " +
-        s"$rounds*$perRound refine")
-    val history = Array.fill(cv)(
-      scala.collection.mutable.ArrayBuffer.empty[Double])
-    val results = scala.collection.mutable.ArrayBuffer.empty[TrialResult]
-    def run(hs: Seq[Hypers]): Unit = hs.foreach { h =>
-      val t = results.length
-      results += runTrial(t, h, cv, warmupSteps, history, foldLosses(t))
-    }
-    run(baseHypers)
-    for (r <- 0 until rounds)
-      run(nextRefineHypers(finish(results.toSeq), perRound, seed, r, shrink))
-    finish(results.toSeq)
-  }
-
-  /** The hypers refinement round `round` will train, derived from the
-    * base hypers and every loss row computed so far (base + rounds
-    * before `round`). Workers call this to re-derive their round's
-    * trial hypers bit-identically with no shared plan file. */
-  def refineRoundPlan(baseHypers: Seq[Hypers],
-      foldLosses: Seq[Seq[Double]], round: Int, perRound: Int, cv: Int,
-      seed: Long, warmupSteps: Int = 2,
-      shrink: Double = 8.0): Seq[Hypers] =
-    nextRefineHypers(
-      replayRefined(baseHypers, foldLosses, round, perRound, cv, seed,
-        warmupSteps, shrink),
-      perRound, seed, round, shrink)
 }

@@ -38,16 +38,9 @@ object EventStream {
   val DefaultStateShards: Int =
     stateShardsFrom(sys.env.get("SPARK_GRAFT_STATE_SHARDS"))
 
-  /** Parses a `SPARK_GRAFT_STATE_SHARDS` value (absent → 8). A malformed
-    * or non-positive value fails with a message naming the variable and
-    * the value, not a bare NumberFormatException from object init. */
+  /** Parses a `SPARK_GRAFT_STATE_SHARDS` value (absent → 8). */
   private[graft] def stateShardsFrom(raw: Option[String]): Int =
-    raw.fold(8) { v =>
-      val n = v.toIntOption
-      require(n.exists(_ > 0),
-        s"SPARK_GRAFT_STATE_SHARDS must be a positive integer, got '$v'")
-      n.get
-    }
+    graft.Sessions.positiveInt("SPARK_GRAFT_STATE_SHARDS", raw, 8)
 
   /** Live-key estimate feeding `StateStores.configure` (the measured
     * in-heap/RocksDB rule) for the engine's BOUNDED AvailableNow
@@ -957,27 +950,6 @@ object EventStream {
       q.awaitTermination()
       Jdbc.readAll(spark, url, table)
     }
-
-  /** One instrumented windowed-stream run, splitting wall-clock into
-    * `start()` (source discovery, query planning, state-store init) vs
-    * `awaitTermination()` (batch execution), plus the per-batch
-    * `triggerExecution` durations Spark itself reports — the evidence for
-    * whether z4's cost is fixed startup overhead or data-volume work. */
-  def timeWindowedOnce(spark: SparkSession, sfDir: String,
-      queryName: String): (Long, Long, Seq[Long]) = {
-    val t0 = System.nanoTime()
-    val q = windowedCounts(spark, sfDir).writeStream
-      .format("memory").queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    val t1 = System.nanoTime()
-    q.awaitTermination()
-    val t2 = System.nanoTime()
-    val batches = q.recentProgress.toSeq
-      .flatMap(p => Option(p.durationMs.get("triggerExecution")).map(_.toLong))
-    ((t1 - t0) / 1000000, (t2 - t1) / 1000000, batches)
-  }
 
   /** Stream-stream interval join: purchases joined to same-user clicks
     * from the preceding `windowHours` (the streaming face of the z7

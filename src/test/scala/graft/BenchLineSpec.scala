@@ -205,6 +205,20 @@ class BenchLineSpec extends AnyFunSuite {
       results.take(5).map(_._2).sum) < 5e-3)
   }
 
+  test("SPARK_GRAFT_BENCH_REPS and SPARK_GRAFT_CPUS parse up front") {
+    assert(Bench.repsFrom(None) == 5)
+    assert(Bench.repsFrom(Some("3")) == 3)
+    assert(Bench.cpusFrom(None) == 4)
+    assert(Bench.cpusFrom(Some("16")) == 16)
+    Seq("five", "", "0", "-1").foreach { bad =>
+      val e = intercept[IllegalArgumentException](Bench.repsFrom(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_BENCH_REPS") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+      val c = intercept[IllegalArgumentException](Bench.cpusFrom(Some(bad)))
+      assert(c.getMessage.contains("SPARK_GRAFT_CPUS"), c.getMessage)
+    }
+  }
+
   test("hostile query names cannot corrupt the JSON line") {
     val evil = "q\"ev\\il\nq"
     val n = mapper.readTree(

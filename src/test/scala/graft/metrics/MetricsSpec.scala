@@ -1,6 +1,8 @@
 package graft.metrics
 
+import breeze.linalg.DenseMatrix
 import graft.SparkSpec
+import graft.nn.{Kernel, LossTerm, OrthoO1Term, OrthoO2Term, OrthoO3Term}
 import org.apache.spark.sql.DataFrame
 
 /** Golden-value tests: expected numbers computed independently with
@@ -15,6 +17,13 @@ class MetricsSpec extends SparkSpec {
   private def labelDf(yt: Seq[Int], yp: Seq[Int]): DataFrame = {
     import spark.implicits._
     yt.zip(yp).toDF("label", "pred")
+  }
+
+  /** Array columns `a` and `b` of `df` as row-aligned matrices. */
+  private def mats(df: DataFrame): (DenseMatrix[Double], DenseMatrix[Double]) = {
+    val rows = df.select("a", "b").collect()
+    def m(i: Int) = DenseMatrix(rows.map(_.getSeq[Double](i).toArray).toSeq: _*)
+    (m(0), m(1))
   }
 
   describe("ClusteringMetrics (M4/M5/M6/A6/A8)") {
@@ -93,7 +102,8 @@ class MetricsSpec extends SparkSpec {
 
   describe("ReconLoss (F1/A9/A10/A11-A13)") {
     import spark.implicits._
-    // FIXTURES.md §1.3 matrices; goldens from NumPy
+    // FIXTURES.md §1.3 matrices; goldens from NumPy. A9 and A11–A13
+    // check the training kernel's loss terms, their one implementation.
     val ab = Seq(
       ("r1", Seq(1.0, 2, 3, 4), Seq(4.0, 3, 2, 1)),
       ("r2", Seq(0.0, 1, 0, 1), Seq(1.0, 1, 1, 1)),
@@ -108,7 +118,8 @@ class MetricsSpec extends SparkSpec {
       eps(out("r3"), 2 * 0.7653668647301795, 1e-9)
     }
     it("frobenius batch loss") {
-      eps(ReconLoss.frobenius(ab, "a", "b"), 1.3558169278779773, 1e-9)
+      val (a, b) = mats(ab)
+      eps(Kernel.frobeniusNormalizedLoss(a, b)._1, 1.3558169278779773, 1e-9)
     }
     it("ortho losses O1/O2/O3") {
       val s = Seq(
@@ -116,9 +127,12 @@ class MetricsSpec extends SparkSpec {
         (Seq(0.0, 1, 0, 1), Seq(2.0, 0, 1, 0)),
         (Seq(1.0, 1, 1, 1), Seq(0.0, 1, 2, 1))
       ).toDF("a", "b")
-      eps(ReconLoss.orthoO1(s, "a", "b"), 0.0920976429602116, 1e-9)
-      eps(ReconLoss.orthoO2(s, "a", "b"), 0.75, 1e-9)
-      eps(ReconLoss.orthoO3(s, "a", "b"), 1.0 / 3.0, 1e-9)
+      val (a, b) = mats(s)
+      def loss(t: LossTerm) =
+        t.compute(Map("a" -> a, "b" -> b), IndexedSeq.empty)._1
+      eps(loss(OrthoO1Term("a", "b", 1.0)), 0.0920976429602116, 1e-9)
+      eps(loss(OrthoO2Term("a", "b", 1.0)), 0.75, 1e-9)
+      eps(loss(OrthoO3Term("a", "b", 1.0)), 1.0 / 3.0, 1e-9)
     }
   }
 

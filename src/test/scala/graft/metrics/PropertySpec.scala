@@ -99,14 +99,15 @@ class PropertySpec extends SparkSpec {
 
   describe("recon-loss norm laws (A9)") {
     it("frobenius loss is symmetric-ish bounded: 0 on identical, >0 else") {
-      import spark.implicits._
+      import breeze.linalg.DenseMatrix
+      import graft.nn.Kernel.frobeniusNormalizedLoss
       for (s <- 40 to 42) {
         val vals = sampled(Gen.listOfN(5,
           Gen.listOfN(4, Gen.choose(0.1, 10.0))), s)
-        val df = vals.map(v => (v, v)).toDF("a", "b")
-        assert(ReconLoss.frobenius(df, "a", "b") < 1e-12)
-        val shifted = vals.map(v => (v, v.map(_ * 2 + 1))).toDF("a", "b")
-        assert(ReconLoss.frobenius(shifted, "a", "b") >= 0)
+        val a = DenseMatrix(vals.map(_.toArray): _*)
+        assert(frobeniusNormalizedLoss(a, a)._1 < 1e-12)
+        val shifted = DenseMatrix(vals.map(_.map(_ * 2 + 1).toArray): _*)
+        assert(frobeniusNormalizedLoss(a, shifted)._1 >= 0)
       }
     }
   }

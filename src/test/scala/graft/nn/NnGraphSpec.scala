@@ -166,78 +166,6 @@ class NnGraphSpec extends SparkSpec {
       assert(l > 0 && !l.isNaN)
     }
 
-    it("trainSync (treeAggregate path) converges and is deterministic") {
-      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
-      val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
-        batchSize = 0 /* unused in sync mode */, epochs = 14, seed = 21)
-      val t1 = Trainer.trainSync(data, model, cfg)
-      val first3 = t1.epochLosses.take(3).sum / 3
-      val last3 = t1.epochLosses.takeRight(3).sum / 3
-      assert(last3 < first3,
-        s"sync loss did not fall: ${t1.epochLosses.mkString(", ")}")
-      assert(t1.epochLosses.forall(l => !l.isNaN && !l.isInfinite))
-      // first-epoch loss is deterministic (same init + per-partition
-      // seeds); later epochs drift at FP level because treeReduce's
-      // gradient-summation order varies — inherent to synchronous
-      // data-parallel reduction (same as Spark ML's treeAggregate).
-      val t2 = Trainer.trainSync(data, model, cfg)
-      assert(math.abs(t1.epochLosses.head - t2.epochLosses.head) < 1e-12)
-    }
-
-    it("chunked gradient reduction matches the unchunked first epoch") {
-      val model = TestNets.cncSized(6, 4, hidden = Seq(8), embed = 3).model
-      val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
-        batchSize = 0, epochs = 6, seed = 21)
-      val whole = Trainer.trainSync(data, model, cfg)
-      val chunked = Trainer.trainSync(data, model, cfg,
-        gradChunks = 7)
-      // forward pass from identical init → identical first-epoch loss;
-      // later epochs drift at FP level (reduction order)
-      assert(math.abs(whole.epochLosses.head - chunked.epochLosses.head)
-        < 1e-12)
-      assert(chunked.epochLosses.last < chunked.epochLosses.head)
-    }
-
-    it("auto gradient slicing bounds in-flight bytes at the search maximum") {
-      // SURVEY §4.4: the random-search width maximum is ~45 M params —
-      // the slice rule must keep every reduction operand within the
-      // declared byte bound, for that width and any other
-      for (p <- Seq(1L, 1000L, 8_388_608L, 45_000_000L, 200_000_000L)) {
-        val chunks = Trainer.gradChunksFor(p)
-        val sliceLen = (p + chunks - 1) / chunks
-        assert(sliceLen * 8 <= Trainer.DefaultGradSliceBytes,
-          s"paramCount=$p: slice ${sliceLen * 8} B > bound")
-        // no over-slicing: one fewer chunk would break the bound
-        if (chunks > 1)
-          assert((p + chunks - 2) / (chunks - 1) * 8
-            > Trainer.DefaultGradSliceBytes, s"paramCount=$p over-sliced")
-      }
-      assert(Trainer.gradChunksFor(45_000_000L) == 6)
-      // the REAL widest family at the exact TCGA widths: MOCSS at
-      // (20531, 1046) is 97.2 M params — auto-slicing must engage with
-      // 12 slices of <= 64 MiB (a since-removed probe measured the bound:
-      // sliced completes at -Xmx8g where the monolithic reduce OOMs)
-      val mocss = graft.nn.ArchZoo.mocss(20531, 1046, 1.0).model
-      assert(mocss.paramCount == 97_169_042L, s"=${mocss.paramCount}")
-      val tcgaChunks = Trainer.gradChunksFor(mocss.paramCount)
-      assert(tcgaChunks == 12)
-      assert((mocss.paramCount + tcgaChunks - 1) / tcgaChunks * 8
-        <= Trainer.DefaultGradSliceBytes)
-      // a genuinely-wide layer driven through the AUTO path: a tiny
-      // slice budget forces many sequential slice reductions, and the
-      // result still matches the whole-gradient first epoch exactly
-      val cfg = Trainer.Config(lr = 1e-2, weightDecay = 1e-6,
-        batchSize = 0, epochs = 2, seed = 21)
-      val model = TestNets.cncSized(6, 4, hidden = Seq(64), embed = 3).model
-      val budget = 1024L // bytes → 128 doubles per slice
-      assert(Trainer.gradChunksFor(model.paramCount, budget) > 5)
-      val sliced = Trainer.trainSync(data, model, cfg,
-        maxGradSliceBytes = budget)
-      val whole = Trainer.trainSync(data, model, cfg, gradChunks = 1)
-      assert(math.abs(sliced.epochLosses.head - whole.epochLosses.head)
-        < 1e-12)
-    }
-
     it("MOCSS graph model trains and embeds (spec1||spec2||avg shared)") {
       val arch = ArchZoo.mocss(6, 4, reconMultiplier = 0.7)
       val t = Trainer.train(data, arch.model,
@@ -248,6 +176,9 @@ class NnGraphSpec extends SparkSpec {
       val rows = inf.select("embedding", "recon_loss").collect()
       assert(rows.forall(_.getSeq[Double](0).length == 96)) // 32+32+32
       assert(rows.forall(_.getDouble(1) >= 0))
+      // the widest family at the exact TCGA widths (20531, 1046)
+      val mocss = graft.nn.ArchZoo.mocss(20531, 1046, 1.0).model
+      assert(mocss.paramCount == 97_169_042L, s"=${mocss.paramCount}")
     }
   }
 }

@@ -7,7 +7,7 @@ import graft.SparkSpec
   * QUALITY_r9–r12 established the recon floor as a measured constant:
   * three families × two seeds × two cv protocols all select the same
   * best trials at every breadth prefix, and the replayed-best-trial
-  * evals landed (CNC 1.0019 / refined 1.0015, MM 1.0248, X_AE 0.9812;
+  * evals landed (CNC 1.0019, MM 1.0248, X_AE 0.9812;
   * NB accuracy 1.0000 everywhere; torch-order Adam 1.0018, dropout
   * streams 1.0018/1.0017 — QUALITY_r12). Those recon numbers require
   * full retrains, so what CI freezes here is everything that DETERMINES
@@ -16,7 +16,7 @@ import graft.SparkSpec
   *  1. selection replay over the committed worker loss files — same
   *     best trial, same avg CV loss, same best hypers, at every
   *     published prefix, for all five waves (CNC cv=3 seed 42 / seed 7,
-  *     CNC cv=5, MM, X_AE) and the 2×8 refinement;
+  *     CNC cv=5, MM, X_AE);
   *  2. an exact-value convergence gold: a seeded end-to-end train of a
   *     small CNC-shaped stack (Linear+ReLU+BN+Dropout, both decoders)
   *     whose final epoch loss is pinned to 1e-9 — a kernel or trainer
@@ -33,8 +33,7 @@ class FloorRegressionSpec extends SparkSpec {
   private val logs = "logs"
 
   /** Worker loss file lines "t=<i> [cv=<k> ]losses=<l0>,<l1>,…" by
-    * trial. The optional `cv=` tag (the breadth workers' lines carry it)
-    * must agree with the refine path's fixed cv=3. */
+    * trial. An optional `cv=` tag must say cv=3. */
   private def read(file: String): Map[Int, Seq[Double]] = {
     val cv = 3
     val rx = """t=(\d+) (?:cv=(\d+) )?losses=([0-9eE+\-.,NaN]+)""".r.unanchored
@@ -42,7 +41,7 @@ class FloorRegressionSpec extends SparkSpec {
     try src.getLines()
       .collect { case rx(t, cvTag, ls) =>
         if (cvTag != null) require(cvTag.toInt == cv,
-          s"loss file trial $t was computed at cv=$cvTag; refine is cv=$cv")
+          s"loss file trial $t was computed at cv=$cvTag, expected cv=$cv")
         t.toInt -> ls.split(",").map(_.toDouble).toSeq }
       .toMap
     finally src.close()
@@ -99,18 +98,6 @@ class FloorRegressionSpec extends SparkSpec {
     it("X_AE: t7 at EVERY prefix — breadth moved it zero (QUALITY_r11)") {
       val l = read("QUALITY_r11_xae_losses.txt")
       Seq(8, 16, 32, 50).foreach(pinPrefix(l, 42, 3, _, 7, 12.7337))
-    }
-
-    it("refinement 2x8 over the seed-42 base lands on t59 (QUALITY_r11)") {
-      val l = read("QUALITY_r11_refine_losses.txt")
-      val res = RandomSearch.replayRefined(
-        RandomSearch.hyperSequence(50, 42), dense(l, 66),
-        rounds = 2, perRound = 8, cv = 3, seed = 42, shrink = 8.0)
-      assert(res.best.trial == 59, res.best.toString)
-      assert(math.abs(res.best.avgLoss - 12.7506) < 5e-5, res.best.avgLoss)
-      val h = res.best.hypers
-      // round 1 pressed into the published lr ceiling (clipped at 1e-2)
-      assert(h.lr == 1e-2 && h.batchSize == 64 && h.epochs == 150, h.toString)
     }
   }
 
